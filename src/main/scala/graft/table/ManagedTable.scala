@@ -2870,24 +2870,20 @@ final class ManagedTable(spark: SparkSession, val path: String)
     }
     // filesExplicit: a shallow clone's founding commit records the SOURCE's
     // files — the live dir is empty by design and must not be listed.
-    // checkpointFromState (DEFAULT ON since r11 — Delta's exact trust
-    // model; `graft.manifest.checkpointFromState=false` restores the
-    // r10 listing behavior): a checkpoint-due commit with declared
+    // Delta's exact trust model: a checkpoint-due commit with declared
     // churn + trusted parent state assembles its full file list from
     // state ± churn instead of listing — EVERY commit is then
     // listing-free and the dir is verified only at BOOTSTRAP/RECOVER,
     // fresh-handle checks, and (under asyncCheckpoint) the maintenance
     // verification. On an object store a 1e7-file recursive listing is
-    // the checkpoint commit's long pole (10k+ LIST pages; ManifestBench
-    // CKPT-FROM-STATE A/B measures the local-fs delta); the trade is
+    // the checkpoint commit's long pole (10k+ LIST pages); the trade is
     // that out-of-band dir edits stay outside the log until a trust
     // boundary instead of being absorbed by the next checkpoint's
     // listing. Soaked by OccSpec (writers straddling a state-assembled
-    // checkpoint) and CommitFastPathSpec before the default flip.
+    // checkpoint) and CommitFastPathSpec.
     val stateFiles: Option[Seq[(String, Long)]] =
       if (churn.isEmpty || filesExplicit.isDefined || manifestsRemapped ||
-          operation == "BOOTSTRAP" || operation == "RECOVER" ||
-          properties.get("graft.manifest.checkpointFromState").contains("false"))
+          operation == "BOOTSTRAP" || operation == "RECOVER")
         None
       else CommitLiveCache.get(qualifiedRoot, v - 1).map { st =>
         val (added0, removed0) = churn.get

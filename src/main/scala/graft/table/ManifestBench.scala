@@ -1,7 +1,8 @@
 package graft.table
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Metadata-scale probe for the checkpoint-manifest fold: how long does
   * [[ManagedTable.manifestFiles]] take to resolve a snapshot when the
@@ -25,14 +26,9 @@ object ManifestBench {
   def main(args: Array[String]): Unit = {
     val maxExp = if (args.nonEmpty) args(0).toInt else 6
     val minExp = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-manifest-bench")
     spark.sparkContext.setLogLevel("WARN")
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+    val fs = new Path("file:///").getFileSystem(
       spark.sparkContext.hadoopConfiguration)
 
     for (exp <- minExp to maxExp) {
@@ -300,11 +296,10 @@ object ManifestBench {
         CommitLiveCache.invalidate(rootQ)
         fs.delete(new Path(croot).getParent, true)
       }
-      // ---- CHECKPOINT-FROM-STATE A/B (r11 soak): the same checkpoint-due
-      // commit measured on the LISTING path vs assembled from state ±
-      // churn (graft.manifest.checkpointFromState) — over n REAL (empty,
-      // sidecar-covered) files so the listing side pays genuine dir-walk
-      // RPCs, the cost the state path deletes. Run at ≤1e6 (creating 1e7
+      // ---- SYNC CHECKPOINT COMMIT over n REAL (empty, sidecar-covered)
+      // files: the checkpoint-due commit assembles its full file list from
+      // the cached state ± churn and writes the parquet checkpoint inline;
+      // timed next to the plain commit after it. Run at ≤1e6 (creating 1e7
       // real files is not a bench, it's an outage).
       if (n <= 1000000) locally {
         val croot = java.nio.file.Files
@@ -312,12 +307,11 @@ object ManifestBench {
         val ct = new ManagedTable(spark, croot)
         import spark.implicits._
         ct.overwrite(Seq((0L, "seed")).toDF("k", "v"))
+        val interval = 4
         ct.setProperties(Map(
-          "graft.manifest.checkpointInterval" -> "4",
+          "graft.manifest.checkpointInterval" -> interval.toString,
           "graft.manifest.checkpointFormat" -> "parquet",
-          "graft.manifest.checkpointPartSize" -> (n / 8 + 1).toString,
-          // side A measures the r10 LISTING behavior (default is now on)
-          "graft.manifest.checkpointFromState" -> "false"))
+          "graft.manifest.checkpointPartSize" -> (n / 8 + 1).toString))
         // n empty part files, each pre-covered by a sidecar entry keyed
         // (path, len=0) so no fold ever opens a footer
         val dataDir = new Path(croot)
@@ -334,44 +328,44 @@ object ManifestBench {
         }
         val bo = fs.create(new Path(croot + "._log", "_file_rows.txt"), true)
         try bo.write(bsb2.toString.getBytes("UTF-8")) finally bo.close()
+        def manifestText(v: Long): String = {
+          val in = fs.open(new Path(croot + "._log", f"v$v%05d.json"))
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        }
+        def timedAppend(k: Long, s: String): Double = {
+          val t0 = System.nanoTime()
+          ct.append(Seq((k, s)).toDF("k", "v"))
+          (System.nanoTime() - t0) / 1e6
+        }
         val tB0 = System.nanoTime()
         ct.bootstrap() // RECOVER: absorbs the n files (a listing checkpoint)
         val bootMs = (System.nanoTime() - tB0) / 1e6
-        // appends 1-3 ride the fast path; append 4 is checkpoint-due →
-        // LISTING-path checkpoint (A)
-        for (i <- 1 to 3) ct.append(Seq((i.toLong, s"r$i")).toDF("k", "v"))
-        val tA1 = System.nanoTime()
-        ct.append(Seq((100L, "ckptA")).toDF("k", "v"))
-        val listingMs = (System.nanoTime() - tA1) / 1e6
-        // appends 5-7 fast; append 8 checkpoint-due with
-        // checkpointFromState (the r11 default) → state-assembled (B)
-        ct.setProperties(Map("graft.manifest.checkpointFromState" -> "true"))
-        for (i <- 5 to 7) ct.append(Seq((i.toLong, s"r$i")).toDF("k", "v"))
-        val tB1 = System.nanoTime()
-        ct.append(Seq((101L, "ckptB")).toDF("k", "v"))
-        val stateMs = (System.nanoTime() - tB1) / 1e6
-        println(f"[manifest-bench] n=$n%,d REAL files CKPT-FROM-STATE A/B: " +
-          f"bootstrap(listing ckpt)=$bootMs%.0f ms, checkpoint-due commit " +
-          f"LISTING path=$listingMs%.0f ms vs FROM-STATE=$stateMs%.0f ms " +
-          f"(both fold the cached sidecar; the delta is the dir walk + " +
-          f"consistency sidecar rewrite the state path retires)")
+        // untimed fast appends up to the version before the boundary
+        var i = 0L
+        while ((ct.version + 1) % interval != 0) {
+          i += 1; ct.append(Seq((i, s"r$i")).toDF("k", "v"))
+        }
+        val ckptMs = timedAppend(100L, "ckpt")
+        assert(ct.version % interval == 0 &&
+          manifestText(ct.version).contains("filesParquet"),
+          s"the timed append landed v${ct.version}, not a checkpoint")
+        val plainMs = timedAppend(101L, "plain")
+        println(f"[manifest-bench] n=$n%,d REAL files SYNC CHECKPOINT " +
+          f"COMMIT: bootstrap(listing ckpt)=$bootMs%.0f ms, checkpoint-due " +
+          f"append (v${ct.version - 1})=$ckptMs%.0f ms vs plain append " +
+          f"(v${ct.version})=$plainMs%.0f ms")
         // ---- SEED-FROM-LOG (r11): a fresh process's FIRST commit used
         // to pay the listing path once to warm the state cache; with the
         // handle's dir↔log trust already established, the parent state
-        // now seeds from the v8 checkpoint's parquet rows instead —
-        // measured as (cold-state append) vs the FROM-STATE number above
+        // now seeds from the checkpoint's parquet rows instead —
+        // measured as (cold-state append) vs the plain append above
         // (same commit, warm state).
         locally {
-          val rootQ2 = fs.makeQualified(new Path(croot)).toString
-          CommitLiveCache.invalidate(rootQ2)
-          val tS0 = System.nanoTime()
-          ct.append(Seq((102L, "seeded")).toDF("k", "v"))
-          val seedMs = (System.nanoTime() - tS0) / 1e6
-          val mf = new Path(croot + "._log", f"v${ct.version}%05d.json")
-          val in2 = fs.open(mf)
-          val mtxt = try scala.io.Source.fromInputStream(in2, "UTF-8").mkString
-            finally in2.close()
-          val fast = mtxt.contains("\"add\":[") // delta manifest = no listing ran
+          CommitLiveCache.invalidate(fs.makeQualified(new Path(croot)).toString)
+          val seedMs = timedAppend(102L, "seeded")
+          // delta manifest = no listing ran
+          val fast = manifestText(ct.version).contains("\"add\":[")
           println(f"[manifest-bench] n=$n%,d REAL files SEED-FROM-LOG " +
             f"first-commit-of-a-fresh-process: append=$seedMs%.0f ms " +
             f"(state rebuilt from checkpoint rows, no dir listing; " +

@@ -2,8 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry and
-  * prints the row count (driver checks rows > 0).
+/** Entry smoke: runs SparkEntry.entry and prints the row count (rows > 0
+  * passes). The only main that builds a plain `SparkSession` instead of
+  * [[graft.GraftSession]]: it stands in for a caller's own session, which
+  * is not built through GraftSession, so `entry` must work on a plain
+  * session.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.table.ManagedTable
 
 /** Metadata-scale probe: commit latency as the log grows. 150 tiny
@@ -14,12 +13,7 @@ import graft.table.ManagedTable
 object LogBench {
   def main(args: Array[String]): Unit = {
     val commits = if (args.nonEmpty) args(0).toInt else 150
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-log-bench")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

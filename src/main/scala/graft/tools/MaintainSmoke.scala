@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.model.Tables
 import graft.table.ManagedTable
 
@@ -13,13 +13,7 @@ import graft.table.ManagedTable
   */
 object MaintainSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-maintain-smoke")
     spark.sparkContext.setLogLevel("WARN")
 
     val dir = "/root/testdata/sf0.001"

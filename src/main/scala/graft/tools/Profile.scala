@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Per-stage and per-job attribution for declared queries (optimization
   * guide §1: measure first). Runs each named query with a listener and
@@ -9,6 +9,8 @@ import graft.{GraftSession, SparkEntry}
   * task time with their shuffle/input bytes, and a job timeline (wall span
   * per job + the DRIVER GAP preceding it — planning/commit/fs work shows
   * up as gaps, the local stand-in for "nothing is running" in the UI).
+  * Each run builds the query and forces it as [[graft.Bench]] does; names
+  * resolve through [[graft.Bench.resolve]].
   *
   * Usage: runMain graft.tools.Profile <sfDir> <iters> <query...>
   */
@@ -73,38 +75,19 @@ object Profile {
     val names = args.drop(2).toSeq
     val spark = GraftSession.local("graft-profile")
     spark.sparkContext.setLogLevel("WARN")
-    // same warm-up as Bench
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/documents.parquet").count()
-    catch { case _: Throwable => () }
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, {
-        // short-key resolution (the bench convention: 'q146' is the qNN
-        // prefix before the first '_'), then UNIQUE prefix — 'q1' matches
-        // q100… too, and an arbitrary pick would silently profile the
-        // wrong query
-        val byShort = SparkEntry.queries.keys
-          .filter(_.takeWhile(_ != '_') == name).toSeq.sorted
-        val ms = if (byShort.nonEmpty) byShort
-          else SparkEntry.queries.keys.filter(_.startsWith(name)).toSeq.sorted
-        ms match {
-          case Seq(one) => SparkEntry.queries(one)
-          case Seq() => sys.error(s"no declared query matches '$name'")
-          case many => sys.error(
-            s"ambiguous query prefix '$name': ${many.mkString(", ")}")
-        }
-      })
+    Bench.warmUp(spark, sfDir)
+    names.map(Bench.resolve).foreach { name =>
       (1 to iters).foreach { it =>
         val lst = new Lst
         spark.sparkContext.addSparkListener(lst)
         val t0 = System.currentTimeMillis()
-        val n = try fn(spark, sfDir).count() catch { case e: Throwable =>
-          println(s"[profile] $name FAILED: $e"); -1L }
+        try Bench.force(SparkEntry.queries(name)(spark, sfDir))
+        catch { case e: Throwable => println(s"[profile] $name FAILED: $e") }
         val t1 = System.currentTimeMillis()
         // listener bus is async; give it a beat to drain before reporting
         Thread.sleep(400)
         spark.sparkContext.removeSparkListener(lst)
-        println(f"[profile] $name iter=$it rows=$n wall=${(t1 - t0) / 1000.0}%.3f s")
+        println(f"[profile] $name iter=$it wall=${(t1 - t0) / 1000.0}%.3f s")
         println(lst.report(t0, t1))
       }
     }

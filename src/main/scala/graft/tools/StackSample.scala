@@ -1,13 +1,14 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
 
 /** Driver-thread sampling profiler for declared queries (optimization
   * guide §7.3 "when nothing seems to be happening"): a daemon thread
   * samples the query-running thread's stack every few ms while the named
   * queries loop, then prints the most frequent collapsed stacks. The
   * driver GAPS (planning, commit fs work, schema/footer reads) happen on
-  * exactly this thread, so the histogram attributes them directly.
+  * exactly this thread, so the histogram attributes them directly. Each
+  * iteration builds and forces the query as [[graft.Bench]] times it.
   *
   * Usage: runMain graft.tools.StackSample <sfDir> <iters> <query...>
   */
@@ -18,9 +19,7 @@ object StackSample {
     val names = args.drop(2).toSeq
     val spark = GraftSession.local("graft-stacksample")
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/documents.parquet").count()
-    catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
 
     val target = Thread.currentThread()
     val counts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -50,11 +49,10 @@ object StackSample {
     sampler.setDaemon(true)
     sampler.start()
 
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    names.map(Bench.resolve).foreach { name =>
       (1 to iters).foreach { _ =>
         sampling = true
-        fn(spark, sfDir).count()
+        Bench.timeQuery(spark, sfDir, name)
         sampling = false
       }
     }

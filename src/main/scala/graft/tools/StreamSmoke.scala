@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.model.Tables
 
 /** File-source Structured Streaming smoke: events land in a directory in
@@ -15,13 +15,7 @@ import graft.model.Tables
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-stream-smoke")
     spark.sparkContext.setLogLevel("WARN")
 
     val base = java.nio.file.Files.createTempDirectory("stream-smoke").toString

@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, V2WriteCommand}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan guards: the scale properties argued in README must hold in
   * the actual executed plans, not just in intent — regressions here are
@@ -430,5 +436,56 @@ class PlanSpec extends SparkSpec {
         "the scan's answer (stray rows included) is the correct one here")
     } finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ eq rule)
+  }
+
+  /** Operators (by node name, with multiplicity) of `result` that the
+    * plan actually run, `timed`, does not contain.
+    */
+  private def lostOperators(result: LogicalPlan, timed: LogicalPlan): Map[String, Int] = {
+    def ops(p: LogicalPlan): Map[String, Int] =
+      p.collect { case n => n.nodeName }.groupMapReduce(identity)(_ => 1)(_ + _)
+    val have = ops(timed)
+    ops(result).collect {
+      case (op, n) if have.getOrElse(op, 0) < n => op -> (n - have.getOrElse(op, 0))
+    }
+  }
+
+  /** The optimized plan of the write [[Bench.force]] runs on `df`. */
+  private def forcedPlan(df: DataFrame): LogicalPlan = {
+    val seen = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.isInstanceOf[V2WriteCommand]) seen.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Bench.force(df)
+      // listener events arrive asynchronously
+      val qe = seen.poll(120, TimeUnit.SECONDS)
+      assert(qe != null, "the forced write reported no execution")
+      qe.optimizedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("Bench.force keeps every operator of the result plan; count() does not") {
+    val names = Seq("q01_client_stats", "q21_scalar_string",
+      "q25_ngram_jaccard", "q30_text_quality", "q31_langid",
+      "q97_trigram_fluency", "q132_gopher_rules", "q153_lm_stupid_backoff")
+    val countLoses = Set("q21_scalar_string", "q30_text_quality",
+      "q153_lm_stupid_backoff")
+    val failures = names.flatMap { name =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      val result = df.queryExecution.optimizedPlan
+      val lost = lostOperators(result, forcedPlan(df))
+      // negative control: the comparison does catch a plan that drops work
+      val countLost = lostOperators(result,
+        df.groupBy().count().queryExecution.optimizedPlan)
+      (if (lost.nonEmpty) Seq(s"$name: force lost $lost") else Nil) ++
+        (if (countLoses(name) && countLost.isEmpty)
+          Seq(s"$name: count() lost nothing, the control cannot fail")
+        else Nil)
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

@@ -167,7 +167,6 @@ class CommitFastPathSpec extends SparkSpec {
   test("opt-in checkpointFromState: checkpoint commits assemble from state, never the dir") {
     val t = freshTable("fp-ckpt-state")
     t.overwrite(Seq((0L, "r")).toDF("k", "v"))            // v0
-    t.setProperties(Map("graft.manifest.checkpointFromState" -> "true"))
     // plant an out-of-band stray: a LISTING-based checkpoint would absorb
     // it into the log; the state-based one must keep the log manifest-true
     Seq((99L, "stray")).toDF("k", "v").write.mode("append").parquet(t.path)
@@ -194,7 +193,6 @@ class CommitFastPathSpec extends SparkSpec {
   test("checkpointFromState: a DV delete AT the checkpoint boundary stays exact, and maintenance reconciles") {
     val t = freshTable("fp-ckpt-dv")
     t.overwrite(Seq((0L, "r")).toDF("k", "v"))            // v0
-    t.setProperties(Map("graft.manifest.checkpointFromState" -> "true"))
     for (i <- 1L to 9L) t.append(Seq((i, s"x$i")).toDF("k", "v")) // v1..v9
     // v10: the checkpoint-due commit is a DV-only delete (zero churn) —
     // the full file list assembles from state, bitmaps filter against it

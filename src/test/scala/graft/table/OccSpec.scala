@@ -417,7 +417,6 @@ class OccSpec extends SparkSpec {
     t.overwrite(Seq((0L, "seed")).toDF("id", "s"))
     t.setProperties(Map(
       "graft.manifest.checkpointFormat" -> "parquet",
-      "graft.manifest.checkpointFromState" -> "true",
       // pins the SYNC checkpoint-due-commit shape (v10 carries the list)
       "graft.manifest.asyncCheckpoint" -> "false"))
     for (i <- 1 to 8) t.append(Seq((i.toLong, s"x$i")).toDF("id", "s")) // v8

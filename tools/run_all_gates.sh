@@ -1,12 +1,15 @@
 #!/usr/bin/env bash
 # Reproduce every driver gate locally:
 #   t1 smoke (entry rows>0), t2 correctness (DuckDB oracle at sf0.01),
-#   bench (sf0.1 JSON line), full scalatest suite.
+#   bench (sf0.1 JSON line), full scalatest suite, fast lakebench tests.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== scalatest =="
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED"
+
+echo "== lakebench (fast tests) =="
+python3 -m unittest discover -s lakebench/tests 2>&1 | tail -1
 
 echo "== t1 entry smoke =="
 sbt -batch "runMain graft.tools.EntrySmoke" 2>&1 | grep 'entry-smoke' | head -1
