@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, encode, expr, lit, when}
 
@@ -785,7 +785,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     */
   private[table] def keptByStatsDistributed(
       preds: Seq[(String, Any, Any)]): Option[Seq[String]] =
-    keptByStatsDistributed(rangePreds(preds), currentDv)
+    keptByStatsDistributed(rangePreds(preds), currentDv).map(_.map(_._1))
 
   /** Range predicates in the planner's decoded form: bounds resolved ONCE
     * on the driver (session-zone timestamp coercion lives here), column
@@ -877,8 +877,11 @@ final class ManagedTable(spark: SparkSession, val path: String)
     else segMeta0 ++ readSidecarFiltered(sidecarBase, missing)
   }
 
+  /** Kept (path, length) pairs; the length is the checkpoint row's or
+    * the add's sidecar entry's, -1 when neither records it.
+    */
   private def keptByStatsDistributed(preds: Seq[MetadataPlane.Pred],
-      dv: Map[String, Array[Long]]): Option[Seq[String]] = {
+      dv: Map[String, Array[Long]]): Option[Seq[(String, Long)]] = {
     val (ckpt, adds, excluded) = distributedBase(version) match {
       case Some(b) => b
       case None => return None
@@ -892,7 +895,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
           MetadataPlane.decide(m.stats, m.rows, dvCounts.getOrElse(p, 0L), preds)
         case None => true // no stats known: conservative keep
       }
-    }
+    }.map(p => (p, segMeta.get(p).map(_._1).getOrElse(-1L)))
     // THE JOB: checkpoint rows in, surviving paths out (delta-touched
     // paths excluded — keptAdds serves them from current sidecar stats)
     import spark.implicits._
@@ -904,10 +907,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
       val cols = raw.columns.toSet
       def optCol(n: String, t: String) =
         if (cols(n)) col(n).cast(t) else lit(null).cast(t)
-      raw.select(col("path").cast("string"),
+      raw.select(col("path").cast("string"), optCol("len", "long"),
           optCol("rows", "long"), optCol("stats", "string"))
-        .as[(String, Option[Long], Option[String])]
-        .flatMap { case (p, rowsOpt, statsOpt) =>
+        .as[(String, Option[Long], Option[Long], Option[String])]
+        .flatMap { case (p, lenOpt, rowsOpt, statsOpt) =>
           if (removedB.value.contains(p)) None
           else {
             val stats = statsOpt.filter(_.nonEmpty)
@@ -917,7 +920,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
             // are then unknowable — Long.MaxValue keeps them conservative
             val rows = rowsOpt.getOrElse(Long.MaxValue)
             if (MetadataPlane.decide(stats, rows, dvB.value.getOrElse(p, 0L),
-                predsB.value)) Some(p)
+                predsB.value)) Some((p, lenOpt.getOrElse(-1L)))
             else None
           }
         }.collect().toSeq
@@ -926,7 +929,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       // accrete blocks on driver and executors
       removedB.destroy(); dvB.destroy(); predsB.destroy()
     }
-    Some((kept ++ keptAdds).distinct.sorted)
+    Some((kept ++ keptAdds).distinct.sortBy(_._1))
   }
 
   /** Whether metadata folds should run as Spark jobs for this snapshot —
@@ -1000,25 +1003,36 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * distributed job when the snapshot size warrants it
     * ([[useDistributedPlanning]]), the measured driver fold otherwise.
     * BOTH paths run [[MetadataPlane.decide]] per file, so they cannot
-    * drift. Shared by the whole readWhere/readWhereNull family.
+    * drift. Shared by the whole readWhere/readWhereNull family. Each kept
+    * file carries the status its scan plans from ([[scanKept]]), built by
+    * [[keptStatus]] from the length its listing or checkpoint recorded.
     */
   private def keptForPreds(preds: Seq[MetadataPlane.Pred],
-      dv: Map[String, Array[Long]]): Seq[String] = {
+      dv: Map[String, Array[Long]]): Seq[FileStatus] = {
     if (useDistributedPlanning)
       keptByStatsDistributed(preds, dv) match {
-        case Some(k) => return k
+        case Some(k) => return k.map((keptStatus _).tupled)
         case None => ()
       }
     val files = liveFilesQ()
     val metas = fileMeta(files)
-    files.map(_._1).filter { p =>
+    files.filter { case (p, _) =>
       MetadataPlane.decide(metas(p).stats, metas(p).rows,
         dv.get(p).map(_.length.toLong).getOrElse(0L), preds)
-    }.sorted
+    }.sortBy(_._1).map((keptStatus _).tupled)
   }
 
+  /** The scan status of kept file `p` (qualified) of length `len`. Its
+    * modification time is 0 (the scan plans without it; only a select of
+    * `_metadata.file_modification_time` would show it). A length of -1
+    * (none recorded) costs one getFileStatus.
+    */
+  private def keptStatus(p: String, len: Long): FileStatus =
+    if (len >= 0) new FileStatus(len, false, 0, 0L, 0L, new Path(p))
+    else fs.getFileStatus(new Path(p))
+
   private def keptForRangePreds(preds: Seq[(String, Any, Any)],
-      dv: Map[String, Array[Long]]): Seq[String] =
+      dv: Map[String, Array[Long]]): Seq[FileStatus] =
     keptForPreds(rangePreds(preds), dv)
 
   /** Live files that may hold a NULL in `colName` — null-count skipping
@@ -1959,7 +1973,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
   def readPoint(colName: String, value: Any): DataFrame = {
     val dv = currentDv
     val ranged = keptForRangePreds(Seq((colName, value, value)), dv)
-    val kept = bloomSurvivors(colName, value, ranged)
+    val survivors =
+      bloomSurvivors(colName, value, ranged.map(_.getPath.toString)).toSet
+    val kept = ranged.filter(s => survivors(s.getPath.toString))
     if (kept.isEmpty) return read.filter(org.apache.spark.sql.functions.lit(false))
     scanKept(kept, dv)
       .filter(col(colName) === lit(value))
@@ -5005,19 +5021,52 @@ final class ManagedTable(spark: SparkSession, val path: String)
       }.reduce(_ unionByName _)
   }
 
-  /** Scan `kept` live files — the skipping-path tail: the one-basePath
-    * fast path for a normal table, the resolved per-root scan for an
-    * unmaterialized shallow clone.
+  /** Scan `kept` live files — the skipping-path tail of [[readWhere]],
+    * [[readWhereAll]], [[readPoint]] and [[readWhereNull]]. A normal
+    * table plans from the engine's own snapshot: a [[KeptFileIndex]] over
+    * the kept statuses, typed by the version's physical schema
+    * ([[physicalSchema]]). Once that schema is cached for the version,
+    * planning runs no Spark job; the first read after a commit or a
+    * property edit infers it from the root once, as [[read]] does on a
+    * miss. Handing the kept paths to `spark.read.parquet` instead runs a
+    * schema-inference job on every read and a listing job above 32
+    * paths. The read's schema is
+    * [[read]]'s, partition types included, where inference over the kept
+    * subset can type a string partition as int. An unmaterialized
+    * shallow clone takes the resolved per-root scan.
     */
-  private def scanKept(kept: Seq[String], dv: Map[String, Array[Long]]): DataFrame = {
+  private def scanKept(kept: Seq[FileStatus], dv: Map[String, Array[Long]]): DataFrame = {
     requireReadable()
-    if (!isShallowClone)
-      applyDv(parquetScan(
-        spark.read.option("basePath", qualifiedRoot), kept), dv)
-    else {
-      val where = resolveLive("the clone snapshot", kept)
-      scanResolved(kept.map(where),
+    if (!isShallowClone) {
+      val root = qualifiedRoot
+      def open(st: org.apache.spark.sql.types.StructType) =
+        KeptFileIndex.scan(spark, root, kept, st)
+      applyDv(shapeScan(open(physicalSchema(spark.read.parquet(path))._1), open), dv)
+    } else {
+      val paths = kept.map(_.getPath.toString)
+      val where = resolveLive("the clone snapshot", paths)
+      scanResolved(paths.map(where),
         dv.map { case (p, a) => where.getOrElse(p, p) -> a })
+    }
+  }
+
+  /** The physical (footer) schema of the current version's root scan:
+    * [[PhysicalSchemaCache]]'s entry, keyed by (version, props signature),
+    * else `infer`'s schema, cached for every later read of this version.
+    * `infer` is a root scan that runs one inference job; it is returned
+    * when it ran, so [[parquetScan]] reuses it rather than opening the root
+    * again. The skipping reads' [[scanKept]] takes the schema alone.
+    */
+  private def physicalSchema(infer: => DataFrame)
+      : (org.apache.spark.sql.types.StructType, Option[DataFrame]) = {
+    val v = version
+    val sig = propsSig
+    PhysicalSchemaCache.get(qualifiedRoot, v, sig) match {
+      case Some(st) => (st, None)
+      case None =>
+        val df = infer
+        PhysicalSchemaCache.put(qualifiedRoot, v, sig, df.schema)
+        (df.schema, Some(df))
     }
   }
 
@@ -6127,7 +6176,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
       .map(ddl => org.apache.spark.sql.types.StructType.fromDDL(ddl).fields.toSeq)
       .getOrElse(Nil)
 
-  /** The parquet scan every read path funnels through. Without declared
+  /** The parquet scan of a `DataFrameReader` over `paths` — [[read]],
+    * [[readVersion]], shallow-clone and row-id scans; the skipping reads
+    * scan their kept files through [[scanKept]]'s index instead, and both
+    * share the shaping in [[shapeScan]]. Without declared
     * extras this is exactly `rd.parquet(paths)`. With extras the scan
     * must NOT trust single-footer schema inference: after an ADD COLUMNS
     * the dir mixes pre-ALTER files (column absent) with post-ALTER files
@@ -6157,6 +6209,34 @@ final class ManagedTable(spark: SparkSession, val path: String)
                           paths: Seq[String],
                           keepRowId: Boolean = false,
                           cacheSchema: Boolean = false): DataFrame = {
+    // cacheSchema (current-version ROOT scans only, single-footer
+    // inference semantics): parquet schema inference is a footer-reading
+    // SPARK JOB per scan — stack-sampling the table-op bench put
+    // `rd.parquet(root)` at the top of the driver-gap profile, once per
+    // managed read. The physical footer schema is a pure function of
+    // (version, props signature) — the same key [[SchemaCache]] uses for
+    // the logical schema, Delta's schema-in-the-log rationale — so replay
+    // it explicitly and skip the inference job. mergeSchema readers
+    // (readEvolved) and the resolved file-subset scans of readVersion and
+    // shallow clones bypass the cache; the skipping reads replay it too,
+    // through [[scanKept]]'s index rather than this reader.
+    val inferred0 =
+      if (!cacheSchema) rd.parquet(paths: _*)
+      else {
+        val (st, inferred) = physicalSchema(rd.parquet(paths: _*))
+        inferred.getOrElse(rd.schema(st).parquet(paths: _*))
+      }
+    shapeScan(inferred0, st => rd.schema(st).parquet(paths: _*), keepRowId)
+  }
+
+  /** The logical shape of a physical scan `inferred0`: the row-id drop,
+    * declared extras and widenings (re-opening the scan through `reopen`
+    * with the explicit schema they need) and [[mapToLogical]]. Shared by
+    * [[parquetScan]] and the skipping reads' [[scanKept]].
+    */
+  private def shapeScan(inferred0: DataFrame,
+                        reopen: org.apache.spark.sql.types.StructType => DataFrame,
+                        keepRowId: Boolean = false): DataFrame = {
     val extras = declaredExtraColumns
     val widen = declaredTypeOverrides
     // the materialized row-id column is internal: schema inference may or
@@ -6167,28 +6247,6 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // (row-id scans over all-materialized file groups, where inference
     // always sees the column) retains it, at the END of the normalized
     // order so schema evolution and ids compose.
-    // cacheSchema (current-version ROOT scans only, single-footer
-    // inference semantics): parquet schema inference is a footer-reading
-    // SPARK JOB per scan — stack-sampling the table-op bench put
-    // `rd.parquet(root)` at the top of the driver-gap profile, once per
-    // managed read. The physical footer schema is a pure function of
-    // (version, props signature) — the same key [[SchemaCache]] uses for
-    // the logical schema, Delta's schema-in-the-log rationale — so replay
-    // it explicitly and skip the inference job. mergeSchema readers
-    // (readEvolved) and file-subset scans bypass the cache.
-    val inferred0 =
-      if (!cacheSchema) rd.parquet(paths: _*)
-      else {
-        val v = version
-        val sig = propsSig
-        PhysicalSchemaCache.get(qualifiedRoot, v, sig) match {
-          case Some(st) => rd.schema(st).parquet(paths: _*)
-          case None =>
-            val df = rd.parquet(paths: _*)
-            PhysicalSchemaCache.put(qualifiedRoot, v, sig, df.schema)
-            df
-        }
-      }
     val inferred =
       if (keepRowId) inferred0 else inferred0.drop(RowTracking.col)
     if (extras.isEmpty && widen.isEmpty) return mapToLogical(inferred)
@@ -6219,8 +6277,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     }
     val withTypes = ordered.map(f =>
       widen.get(f.name.toLowerCase).map(t => f.copy(dataType = t)).getOrElse(f))
-    mapToLogical(rd.schema(org.apache.spark.sql.types.StructType(withTypes))
-      .parquet(paths: _*))
+    mapToLogical(reopen(org.apache.spark.sql.types.StructType(withTypes)))
   }
 
   /** Partition-column set for [[parquetScan]]'s order normalization,

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -11,7 +12,8 @@ import graft.table.ManagedTable
   * pruning (`readWhereNull`) and the metadata-only `countFast()`. Each probe
   * reports files kept vs total (the number that scales — at 100 TB pruned
   * files are pruned object-store GETs) plus warm wall-clock vs the
-  * full-scan filter, with result equality asserted.
+  * full-scan filter, with result equality asserted, and the Spark jobs
+  * each read launched while planning (before its action runs).
   * Usage: runMain graft.tools.SkipBench [sfDir]
   */
 object SkipBench {
@@ -21,6 +23,32 @@ object SkipBench {
     spark.sparkContext.setLogLevel("WARN")
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+    }
+    // Spark jobs started while `plan` builds its frame, counted in an
+    // untimed call after the timed runs. A marker job follows `plan`, and
+    // listener events arrive in order, so once the marker's start is seen
+    // every earlier start has been counted.
+    val planJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.atomic.AtomicReference(
+      new java.util.concurrent.CountDownLatch(1))
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(
+            _.getProperty("spark.job.description") == "skip-bench-marker"))
+          markerSeen.get.countDown()
+        else planJobs.incrementAndGet()
+    })
+    def planJobsOf(plan: => DataFrame): Int = {
+      markerSeen.set(new java.util.concurrent.CountDownLatch(1))
+      planJobs.set(0)
+      plan
+      spark.sparkContext.setJobDescription("skip-bench-marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      if (!markerSeen.get.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        sys.error("skip-bench: the marker job never reached the listener; " +
+          "the planning job count would be partial")
+      planJobs.get()
     }
     val wh = java.nio.file.Files.createTempDirectory("skip-bench").toString
 
@@ -40,13 +68,16 @@ object SkipBench {
     val (keptP, all) = t.filesOverlapping("price", preds(1)._2, preds(1)._3)
     val both = keptD intersect keptP.toSet
     t.readWhereAll(preds).count(); t.read.count() // warm
-    val (n1, t1) = time(t.readWhereAll(preds).count())
-    val (n2, t2) = time(t.read.filter(
+    def full = t.read.filter(
       col("ship_date").between(preds(0)._2, preds(0)._3) &&
-      col("price").between(50000.0, 90000.0)).count())
+      col("price").between(50000.0, 90000.0))
+    val (n1, t1) = time(t.readWhereAll(preds).count())
+    val (n2, t2) = time(full.count())
+    val j1 = planJobsOf(t.readWhereAll(preds))
+    val j2 = planJobsOf(full)
     println(f"[skip-bench] conjunctive: files date=${keptD.size}%d price=${keptP.size}%d " +
       f"both=${both.size}%d of ${all.size}%d; rows=$n1%d identical=${n1 == n2}%b " +
-      f"pruned=${t1}%.3fs full=${t2}%.3fs")
+      f"pruned=${t1}%.3fs (plan jobs $j1%d) full=${t2}%.3fs (plan jobs $j2%d)")
 
     // ---- null-count pruning on a nullable derived column ----
     val ev = Tables.events(spark, sfDir).select(col("event_id"),
@@ -58,8 +89,11 @@ object SkipBench {
     tn.readWhereNull("v").count(); tn.read.count() // warm
     val (m1, u1) = time(tn.readWhereNull("v").count())
     val (m2, u2) = time(tn.read.filter(col("v").isNull).count())
+    val k1 = planJobsOf(tn.readWhereNull("v"))
+    val k2 = planJobsOf(tn.read.filter(col("v").isNull))
     println(f"[skip-bench] null-count: files=${keptN.size}%d of ${allN.size}%d; " +
-      f"rows=$m1%d identical=${m1 == m2}%b pruned=${u1}%.3fs full=${u2}%.3fs")
+      f"rows=$m1%d identical=${m1 == m2}%b pruned=${u1}%.3fs (plan jobs $k1%d) " +
+      f"full=${u2}%.3fs (plan jobs $k2%d)")
 
     // ---- metadata-only count vs a scan count ----
     val (c1, v1) = time(t.countFast())
