@@ -43,6 +43,7 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, encode, expr, l
   */
 final class ManagedTable(spark: SparkSession, val path: String)
     extends org.apache.spark.internal.Logging {
+  import ManagedTable.Committed
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2053,9 +2054,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
     ensureBootstrapped()
     val prev = dvMapForVersion(version)
     val packed = packDvMarks(dvScanWithMeta(prev).filter(cond))
-    if (packed.nonEmpty)
+    if (packed.nonEmpty) noteSchemaPreserved(None) {
       commit("DELETE", partitionCols, dvNew = Some(mergeDvInto(prev, packed)),
         churn = Some((Nil, Set.empty)))
+    }
   }
 
   /** Merge-on-read UPDATE: the matched rows' OLD copies are bitmap-marked
@@ -2080,8 +2082,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
       }.localCheckpoint()
       enforceConstraints(updated)
       val added = appendViaTmp(updated, partitionCols)
-      commit("UPDATE", partitionCols, dvNew = Some(mergeDvInto(prev, packed)),
-        churn = Some((added, Set.empty)))
+      noteSchemaPreserved(Some(physicalSchemaOf(updated))) {
+        commit("UPDATE", partitionCols, dvNew = Some(mergeDvInto(prev, packed)),
+          churn = Some((added, Set.empty)))
+      }
     }
   }
 
@@ -2116,9 +2120,11 @@ final class ManagedTable(spark: SparkSession, val path: String)
         .getOrElse(src).localCheckpoint()
       enforceConstraints(incoming)
       val added = appendViaTmp(incoming, partitionCols)
-      commit("MERGE", partitionCols,
-        dvNew = if (packed.isEmpty) None else Some(mergeDvInto(prev, packed)),
-        churn = Some((added, Set.empty)))
+      noteSchemaPreserved(Some(physicalSchemaOf(incoming))) {
+        commit("MERGE", partitionCols,
+          dvNew = if (packed.isEmpty) None else Some(mergeDvInto(prev, packed)),
+          churn = Some((added, Set.empty)))
+      }
     }
 
   // ---- optimistic merge-on-read DML ------------------------------------
@@ -2147,8 +2153,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
     occBetweenStageAndCommit()
     withCommitLockWait(commitWaitMs) {
       occValidate("DELETE", v0, cons0, commuting = Some(occDmlCommuting))
-      commit("DELETE", partitionCols, dvNew = Some(mergeDvInto(dv0, packed)),
-        churn = Some((Nil, Set.empty)))
+      noteSchemaPreserved(None) {
+        commit("DELETE", partitionCols, dvNew = Some(mergeDvInto(dv0, packed)),
+          churn = Some((Nil, Set.empty)))
+      }
     }
   }
 
@@ -2184,8 +2192,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
         occValidate("UPDATE", v0, cons0, commuting = Some(occDmlCommuting),
           pcs0 = Some(pcs0), schema0 = Some(schema0))
         val added = publishStaged(tmp)
-        commit("UPDATE", partitionCols, dvNew = Some(mergeDvInto(dv0, packed)),
-          churn = Some((added, Set.empty)))
+        noteSchemaPreserved(Some(physicalSchemaOf(updated))) {
+          commit("UPDATE", partitionCols, dvNew = Some(mergeDvInto(dv0, packed)),
+            churn = Some((added, Set.empty)))
+        }
       }
     } finally {
       reapStage(tmp)
@@ -2226,9 +2236,11 @@ final class ManagedTable(spark: SparkSession, val path: String)
           occValidate("MERGE", v0, cons0, commuting = Some(occDmlCommuting),
             pcs0 = Some(pcs0), schema0 = Some(schema0))
           val added = publishStaged(tmp)
-          commit("MERGE", partitionCols,
-            dvNew = if (packed.isEmpty) None else Some(mergeDvInto(dv0, packed)),
-            churn = Some((added, Set.empty)))
+          noteSchemaPreserved(Some(physicalSchemaOf(incoming))) {
+            commit("MERGE", partitionCols,
+              dvNew = if (packed.isEmpty) None else Some(mergeDvInto(dv0, packed)),
+              churn = Some((added, Set.empty)))
+          }
         }
       } finally {
         reapStage(tmp)
@@ -2518,12 +2530,13 @@ final class ManagedTable(spark: SparkSession, val path: String)
       f -> (retainedDir(cur) + "/" + rel)
     }.toMap
     remapFiles(moved)
-    val w = toPhysical(replacement).write.mode(SaveMode.Append)
+    val phys = toPhysical(replacement)
+    val w = phys.write.mode(SaveMode.Append)
     withMicrosTs {
       (if (pcs.nonEmpty) w.partitionBy(pcs.map(physicalColName): _*)
        else w).parquet(path)
     }
-    commit(operation, pcs)
+    noteSchemaPreserved(Some(phys.schema))(commit(operation, pcs))
   }
 
   /** Exact-path remap of log metadata (manifests + DV snapshots) for
@@ -2737,7 +2750,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       operation: String, partitionCols0: Seq[String],
       txn: Option[(String, Long)],
       dvNew: Option[Map[String, Array[Long]]],
-      churn: (Seq[(String, Long)], Set[String])): Unit = {
+      churn: (Seq[(String, Long)], Set[String])): Committed = {
     val (added0, removed0) = churn
     // tolerate funnel over-report: only paths actually live can retire,
     // and a re-declared live path must not double-count as an add.
@@ -2806,6 +2819,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     CommitLiveCache.put(qualifiedRoot,
       CommitLiveCache.State(v, newFiles, liveRows, sizeBytes))
     trustedDirVersion = v
+    Committed(v, partitionCols, added.map(_._1), removed.toSeq)
   }
 
   /** Zero-churn commit recording a NAMING change (mapped RENAME/DROP
@@ -2829,7 +2843,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
                      txn: Option[(String, Long)] = None,
                      dvNew: Option[Map[String, Array[Long]]] = None,
                      filesExplicit: Option[Seq[(String, Long)]] = None,
-                     churn: Option[(Seq[(String, Long)], Set[String])] = None): Unit = {
+                     churn: Option[(Seq[(String, Long)], Set[String])] = None): Committed = {
     val v = version + 1
     val ckptEvery = math.max(1, properties
       .get("graft.manifest.checkpointInterval").flatMap(_.toIntOption)
@@ -2865,8 +2879,8 @@ final class ManagedTable(spark: SparkSession, val path: String)
           seeded
         } else None) match {
         case Some(st) =>
-          commitFromState(v, st, operation, partitionCols0, txn, dvNew,
-            churn.get)
+          val committed = commitFromState(v, st, operation, partitionCols0,
+            txn, dvNew, churn.get)
           if (asyncCkpt && v % ckptEvery == 0) {
             // WRITER feature, recorded under the lease BEFORE the first
             // pointer can exist: a build unaware of `_checkpoints.d`
@@ -2880,7 +2894,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
               ensureFeature("checkpoint-retro", reader = false)
             CheckpointMaintenance.schedule(this)
           }
-          return
+          return committed
         case None => ()
       }
     }
@@ -2959,8 +2973,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
     val prevHist = readHistoryFile()
     val prevRowCount = prevHist.filter(_.version < v)
       .sortBy(_.version).lastOption.map(_.rowCount).getOrElse(0L)
-    val metrics = (files.count(f => !prevSet(f._1)).toLong,
-      prevSet.count(p => !fileSet(p)).toLong, rowCount - prevRowCount)
+    val addedPaths = files.collect { case (p, _) if !prevSet(p) => p }
+    val removedPaths = prevSet.toSeq.filterNot(fileSet)
+    val metrics = (addedPaths.size.toLong, removedPaths.size.toLong,
+      rowCount - prevRowCount)
     val bytesAdded = files.collect { case (p, len) if !prevSet(p) => len }.sum
     val ts = ictTimestamp(prevHist)
     // Delta's log shape: most commits record only their ADD/REMOVE delta
@@ -3006,11 +3022,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
         }
       }
       else if (isCheckpoint) s""""files":[${files.map(f => jstr(f._1)).mkString(",")}]"""
-      else {
-        val added = files.collect { case (p, _) if !prevSet(p) => jstr(p) }
-        val removed = prevSet.toSeq.filterNot(fileSet).sorted.map(jstr)
-        s""""add":[${added.mkString(",")}],"remove":[${removed.mkString(",")}]"""
-      }
+      else
+        s""""add":[${addedPaths.map(jstr).mkString(",")}],""" +
+          s""""remove":[${removedPaths.sorted.map(jstr).mkString(",")}]"""
     writeManifestPutIfAbsent(v, manifestJson(v, ts, operation, partitionCols,
       files.size.toLong, files.map(_._2).sum, rowCount, deletedRows, txn,
       metrics, bytesAdded, fileEntry))
@@ -3060,6 +3074,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
         if (fs.exists(symlinkDir)) fs.delete(symlinkDir, true)
       } else writeSymlinkTree(files.map(_._1))
     }
+    Committed(v, partitionCols, addedPaths, removedPaths)
   }
 
   // ---- single-writer lease --------------------------------------------
@@ -5026,9 +5041,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * table plans from the engine's own snapshot: a [[KeptFileIndex]] over
     * the kept statuses, typed by the version's physical schema
     * ([[physicalSchema]]). Once that schema is cached for the version,
-    * planning runs no Spark job; the first read after a commit or a
-    * property edit infers it from the root once, as [[read]] does on a
-    * miss. Handing the kept paths to `spark.read.parquet` instead runs a
+    * planning runs no Spark job; on a miss (a new process, another
+    * process's commit, a commit or property edit that may change the
+    * schema — see [[noteSchemaPreserved]]) it is inferred from the root
+    * once, as [[read]] does. Handing the kept paths to `spark.read.parquet` instead runs a
     * schema-inference job on every read and a listing job above 32
     * paths. The read's schema is
     * [[read]]'s, partition types included, where inference over the kept
@@ -6466,7 +6482,14 @@ final class ManagedTable(spark: SparkSession, val path: String)
         // partition columns read back through partition-value INFERENCE
         // (string "2024" on disk → int in read.schema), so the writer's
         // original type legitimately differs: cast to the inferred type
-        // rather than rejecting the append
+        // rather than rejecting the append. A string value that type
+        // cannot hold ("x" beside "1", "2") is written as it is: the
+        // directory names are the data, and inference then types the
+        // column string
+        case Some(f) if partitionSet(tf.name.toLowerCase) &&
+            f.dataType == org.apache.spark.sql.types.StringType =>
+          coalesce(col(f.name).try_cast(tf.dataType).cast("string"), col(f.name))
+            .as(tf.name)
         case Some(f) if partitionSet(tf.name.toLowerCase) &&
             org.apache.spark.sql.catalyst.expressions.Cast
               .canCast(f.dataType, tf.dataType) =>
@@ -6485,22 +6508,21 @@ final class ManagedTable(spark: SparkSession, val path: String)
     df.select(aligned.toSeq: _*)
   }
 
-  /** The table schema, or None when it cannot be inferred — e.g. a
-    * partitioned dir whose rows were all deleted leaves no data files.
-    */
-  /** The table's logical read schema, served from the process-wide
-    * [[SchemaCache]] when possible: `read.schema` builds an
-    * InMemoryFileIndex over the ROOT — an O(live files) listing that
-    * made EVERY append pay seconds at 1e5+ real files (found by
-    * stack-sampling the checkpoint A/B bench: 185/200 samples inside
-    * `rd.parquet(root)`). Delta stores the schema in the log
-    * (`metaData.schemaString`); the cache is the equivalent here — keyed
-    * by (version, `_props.txt` signature) so ANY commit (files moved) or
-    * property edit (declared extras / widenings / column mapping change
-    * the logical schema without a commit) misses and recomputes, and the
-    * schema-preserving write funnels carry the entry forward to the
-    * version they created ([[noteSchemaPreserved]]) so a hot blind-append
-    * writer lists the dir once per process, not once per append.
+  /** The table's logical read schema, or None when it cannot be
+    * inferred (a partitioned dir whose rows were all deleted leaves no
+    * data files), served from the process-wide [[SchemaCache]] when
+    * possible: `read.schema` builds an InMemoryFileIndex over the ROOT —
+    * an O(live files) listing that made EVERY append pay seconds at 1e5+
+    * real files (found by stack-sampling the checkpoint A/B bench:
+    * 185/200 samples inside `rd.parquet(root)`). Delta stores the schema
+    * in the log (`metaData.schemaString`); the cache is the equivalent
+    * here — keyed by (version, `_props.txt` signature) so ANY commit
+    * (files moved) or property edit (declared extras / widenings /
+    * column mapping change the logical schema without a commit) misses
+    * and recomputes, unless the commit or edit provably kept the schema
+    * and carried the entry ([[noteSchemaPreserved]], [[writeProperties]]),
+    * so a hot blind-append writer lists the dir once per process, not
+    * once per append.
     */
   private def tableSchemaOpt: Option[org.apache.spark.sql.types.StructType] = {
     val v = version
@@ -6522,15 +6544,109 @@ final class ManagedTable(spark: SparkSession, val path: String)
       (st.getLen, st.getModificationTime)
     } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
 
-  /** Record that the commit that just created `version` preserved the
-    * read schema `s` (a non-evolving append, a DV-only commit, a
-    * compaction): the next writer's [[tableSchemaOpt]] hits without the
-    * O(live) listing. Callers must be certain — an evolving write must
-    * NOT call this (it recomputes on the next read instead).
+  /** Run `commitIt` and hand the version it replaced's cached schemas
+    * ([[PhysicalSchemaCache]], [[SchemaCache]]) on to the version it
+    * created, when the commit provably keeps the root scan's inferred
+    * schema — the single place a commit carries a schema. `wrote` is the
+    * physical schema (`toPhysical(frame).schema`) of the frame the commit
+    * wrote, None when it adopted files it did not write. The entry carries
+    * when the commit wrote no data file, or wrote `wrote` and the new
+    * version's partition directories infer exactly the carried partition
+    * types (see [[keepsPhysicalSchema]]). The lookup is keyed by the
+    * current properties signature, so a property edit inside the funnel
+    * carries only what [[writeProperties]] itself re-keyed: edits to
+    * schema-bearing keys drop the entries. Runs under the caller's lease.
     */
-  private def noteSchemaPreserved(
-      s: Option[org.apache.spark.sql.types.StructType]): Unit =
-    s.foreach(SchemaCache.put(qualifiedRoot, version, propsSig, _))
+  private def noteSchemaPreserved(wrote: Option[org.apache.spark.sql.types.StructType])
+                                 (commitIt: => Committed): Unit = {
+    val c = commitIt
+    val sig = propsSig
+    PhysicalSchemaCache.get(qualifiedRoot, c.version - 1, sig)
+      .filter(keepsPhysicalSchema(_, wrote, c)).foreach { st =>
+        val logical = SchemaCache.get(qualifiedRoot, c.version - 1, sig)
+        PhysicalSchemaCache.put(qualifiedRoot, c.version, sig, st)
+        logical.foreach(SchemaCache.put(qualifiedRoot, c.version, sig, _))
+      }
+  }
+
+  /** True iff the root scan of the version `c` created infers `st`, the
+    * previous version's root schema, as far as [[shapeScan]] can tell. A
+    * commit that moved no file keeps it. Otherwise the new root schema is
+    * the data fields of the written files (`wrote`, minus the partition
+    * columns the write split out; the previous data fields when `c` wrote
+    * no file) followed by the partition columns Spark's partition
+    * discovery infers over every live directory. That discovery is re-run
+    * with `PartitioningUtils.parsePartitions`, the function
+    * `InMemoryFileIndex` uses, so an added `p=x` beside `p=1` retypes `p`
+    * to string, and removing the last `p=x` narrows it back. Compared
+    * nullability aside (a file scan drops it), without declared extra
+    * columns and with declared widened types: whichever footer inference
+    * samples, [[shapeScan]] serves those from the declaration, so a
+    * writer after ADD COLUMNS or ALTER COLUMN TYPE, whose files carry the
+    * column when older footers do not, still carries. Files added without
+    * a `wrote` schema were adopted, not written: never carried.
+    */
+  private def keepsPhysicalSchema(st: org.apache.spark.sql.types.StructType,
+                                  wrote: Option[org.apache.spark.sql.types.StructType],
+                                  c: Committed): Boolean =
+    if (c.added.isEmpty && c.removed.isEmpty) true
+    else {
+      val data = if (c.added.isEmpty) Some(st) else wrote
+      val rootLen = qualifiedRoot.length
+      val parts = CommitLiveCache.get(qualifiedRoot, c.version).flatMap { s =>
+        if (s.files.keysIterator.forall(_.lastIndexOf('/') == rootLen))
+          Some(org.apache.spark.sql.types.StructType(Nil))
+        else inferPartitionSchema(s.files.keys)
+      }
+      (data, parts) match {
+        case (Some(d), Some(ps)) =>
+          val split = (c.partitionCols ++ ps.fieldNames).map(_.toLowerCase).toSet
+          val extras = declaredExtraColumns.map(_.name.toLowerCase).toSet
+          val widen = declaredTypeOverrides
+          def shaped(fs: Seq[org.apache.spark.sql.types.StructField]) =
+            nullableDeep(org.apache.spark.sql.types.StructType(fs
+              .filterNot(f => extras(f.name.toLowerCase))
+              .map(f => widen.get(f.name.toLowerCase)
+                .map(t => f.copy(dataType = t)).getOrElse(f))))
+          shaped(d.fields.toSeq.filterNot(f => split(f.name.toLowerCase)) ++
+            ps.fields) == shaped(st.fields.toSeq)
+        case _ => false
+      }
+    }
+
+  /** The partition schema Spark's partition discovery infers for a root
+    * holding `files`, None when discovery rejects the layout.
+    */
+  private def inferPartitionSchema(files: Iterable[String])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val dirs = files.iterator.map(f => f.substring(0, f.lastIndexOf('/')))
+      .toSet.toSeq.map((d: String) => new Path(d))
+    try Some(org.apache.spark.sql.execution.datasources.GraftPartitionDiscovery
+      .partitionSchema(spark, new Path(qualifiedRoot), dirs))
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The schema `df` is written with: its columns under their physical
+    * names.
+    */
+  private def physicalSchemaOf(df: DataFrame): org.apache.spark.sql.types.StructType =
+    toPhysical(df).schema
+
+  /** `dt` with every field, element and value nullable: the shape a
+    * parquet root scan reports whatever the writer's nullability.
+    */
+  private def nullableDeep(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullableDeep(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullableDeep(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(nullableDeep(m.keyType), nullableDeep(m.valueType), valueContainsNull = true)
+      case o => o
+    }
+  }
 
   private def appendAs(df: DataFrame, partitionCols0: Seq[String],
                        operation: String, allowEvolution: Boolean = false,
@@ -6563,10 +6679,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
       // the O(churn) manifest-is-truth path — and the crash window
       // shrinks to the rename loop, as in the MOR funnels
       val added = appendViaTmp(conformed, partitionCols)
-      commit(operation, partitionCols, txn, churn = Some((added, Set.empty)))
-      // a non-evolving append reads back with the schema it conformed
-      // to — carry the cache entry to the new version (no listing)
-      if (!allowEvolution) noteSchemaPreserved(schema0)
+      noteSchemaPreserved(Some(physicalSchemaOf(conformed))) {
+        commit(operation, partitionCols, txn, churn = Some((added, Set.empty)))
+      }
       maybeAutoCompact()
     }
 
@@ -6827,10 +6942,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
           occValidate("append", v0, cons0, commuting = appendCommuting,
             pcs0 = Some(pcs0), schema0 = Some(schema0))
           val added = publishStaged(tmp)
-          commit("APPEND", partitionCols, txn, churn = Some((added, Set.empty)))
-          // blind OCC appends never evolve; occValidate just proved the
-          // schema unmoved since the stage read it
-          noteSchemaPreserved(schema0)
+          noteSchemaPreserved(Some(physicalSchemaOf(conformed))) {
+            commit("APPEND", partitionCols, txn, churn = Some((added, Set.empty)))
+          }
           true
         }
       }
@@ -7389,23 +7503,40 @@ final class ManagedTable(spark: SparkSession, val path: String)
       finally in.close()
     }
 
-  private def writeProperties(ps: Map[String, String]): Unit = {
+  private def writeProperties(old: Map[String, String],
+                              ps: Map[String, String]): Unit = {
+    val sig0 = propsSig
     // atomic: a torn write must never make the property set half-vanish
     writeAtomic(propsFile, ps.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }.mkString("\n"))
-    // same-process edits drop the schema cache outright — the
-    // (len, mtime) signature alone can collide when a rewrite keeps the
-    // byte length within one mtime tick (writeAtomic's own discipline
-    // for the sidecar/history parse caches)
-    SchemaCache.invalidate(qualifiedRoot)
-    PhysicalSchemaCache.invalidate(qualifiedRoot)
+    // same-process edits never leave an entry under a signature the edit
+    // may not have moved — (len, mtime) alone can collide when a rewrite
+    // keeps the byte length within one mtime tick (writeAtomic's own
+    // discipline for the sidecar/history parse caches). An edit that
+    // leaves every schema-bearing key alone keeps the schema, so its
+    // entries move to the new signature; any other edit drops them.
+    def schemaBearing(m: Map[String, String]) = m.filter { case (k, _) =>
+      k.startsWith("graft.schema.") || k.startsWith("graft.columnMapping") ||
+        k == shallowSourceProp }
+    if (schemaBearing(old) == schemaBearing(ps)) {
+      val sig1 = propsSig
+      SchemaCache.rekey(qualifiedRoot, sig0, sig1)
+      PhysicalSchemaCache.rekey(qualifiedRoot, sig0, sig1)
+    } else {
+      SchemaCache.invalidate(qualifiedRoot)
+      PhysicalSchemaCache.invalidate(qualifiedRoot)
+    }
   }
 
-  def setProperties(ps: Map[String, String]): Unit =
-    writeProperties(fileProperties ++ ps)
+  def setProperties(ps: Map[String, String]): Unit = {
+    val old = fileProperties
+    writeProperties(old, old ++ ps)
+  }
 
-  def unsetProperties(keys: Seq[String]): Unit =
-    writeProperties(fileProperties -- keys)
+  def unsetProperties(keys: Seq[String]): Unit = {
+    val old = fileProperties
+    writeProperties(old, old -- keys)
+  }
 
   // ---- identity columns --------------------------------------------------
 
@@ -7531,9 +7662,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
     val df = if (constraints.nonEmpty) df0.localCheckpoint() else df0
     enforceConstraints(df)
     val tmp = new Path(path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    val w = toPhysical(if (layoutBearing(operation)) df
+    val phys = toPhysical(if (layoutBearing(operation)) df
         else maybeOptimizeWrite(df, partitionCols))
-      .write.mode(SaveMode.Overwrite)
+    val w = phys.write.mode(SaveMode.Overwrite)
     withMicrosTs {
       (if (partitionCols.nonEmpty)
         w.partitionBy(partitionCols.map(physicalColName): _*)
@@ -7546,7 +7677,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
       remapManifests(qualifiedRoot, retainedDir(cur), Nil)
     }
     fs.rename(tmp, dst)
-    commit(operation, partitionCols)
+    // RESTORE writes a past version's rows: its schema is re-inferred
+    noteSchemaPreserved(if (operation == "RESTORE") None else Some(phys.schema)) {
+      commit(operation, partitionCols)
+    }
   }
 
   /** MERGE upsert (E3, deltalake.ipynb:2939–2945): source-wins rewrite via
@@ -7592,7 +7726,8 @@ final class ManagedTable(spark: SparkSession, val path: String)
         if (allowEvolution) (widenTo(read, source.schema),
           widenTo(source, read.schema))
         else (read, source)
-      replaceWith(Merge.upsert(tgt, assignIdentities(src0), keys),
+      // the source feeds both arms of the upsert: materialize it once
+      replaceWith(Merge.upsert(tgt, assignIdentities(src0).localCheckpoint(), keys),
         partitionCols, "MERGE")
     }
     else withCommitLock {
@@ -7601,15 +7736,46 @@ final class ManagedTable(spark: SparkSession, val path: String)
       // still widens (null-fills) so the upsert union aligns
       val src1 = if (allowEvolution) widenTo(source, read.schema) else source
       val target = read
-      val src = assignIdentities(src1)
-      val srcParts = src.select(partitionCols.map(c => col(c)): _*).distinct()
-      val matchedParts = target
-        .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .select(partitionCols.map(c => col(c)): _*).distinct()
-      val affected = srcParts.union(matchedParts).distinct().localCheckpoint()
-      val merged = Merge.upsert(rowsInPartitions(target, affected, partitionCols),
-        src, keys).localCheckpoint()
-      swapPartitions(affected, partitionCols, merged, "MERGE")
+      // the source is evaluated ONCE (Delta's MERGE materializes its source
+      // too): the affected-partition query and the upsert both read it
+      val src = assignIdentities(src1).localCheckpoint()
+      val pcols = partitionCols.map(col)
+      val affected = src.select(pcols: _*)
+        .union(target.join(src.select(keys.map(col): _*).distinct(), keys,
+          "left_semi").select(pcols: _*))
+        .distinct()
+      val affectedRows = affected.collect().toSeq
+      // rewrite only the affected partitions, read through a literal
+      // partition predicate the scan prunes directories with
+      val merged = Merge.upsert(
+        target.filter(inPartitions(affectedRows, partitionCols)), src, keys)
+        .localCheckpoint()
+      swapPartitions(spark.createDataFrame(
+          java.util.Arrays.asList(affectedRows: _*), affected.schema),
+        partitionCols, merged, "MERGE")
+    }
+  }
+
+  /** True on rows whose `partitionCols` tuple is one of `rows` (null
+    * matching null) — a predicate over partition columns only, so a scan
+    * lists and reads just those partition directories.
+    */
+  private def inPartitions(rows: Seq[Row], partitionCols: Seq[String]): Column = {
+    def eq(c: String, v: Any): Column =
+      if (v == null) col(c).isNull else col(c) === lit(v)
+    def anyOf(cs: Seq[Column]): Column =
+      if (cs.isEmpty) lit(false)
+      else if (cs.size == 1) cs.head
+      else { val (a, b) = cs.splitAt(cs.size / 2); anyOf(a) || anyOf(b) }
+    partitionCols match {
+      case Seq(c) =>
+        val vs = rows.map(_.get(0))
+        val nonNull = vs.filter(_ != null).distinct
+        anyOf((if (nonNull.isEmpty) Nil else Seq(col(c).isin(nonNull: _*))) ++
+          (if (vs.contains(null)) Seq(col(c).isNull) else Nil))
+      case _ =>
+        anyOf(rows.map(r => partitionCols.zipWithIndex
+          .map { case (c, i) => eq(c, r.get(i)) }.reduce(_ && _)))
     }
   }
 
@@ -7869,9 +8035,11 @@ final class ManagedTable(spark: SparkSession, val path: String)
         enforceConstraints(appends)
         appendViaTmp(appends, partitionCols)
       } else Nil
-      commit("MERGE", partitionCols,
-        dvNew = if (packed.isEmpty) None else Some(mergeDvInto(prev, packed)),
-        churn = Some((added, Set.empty)))
+      noteSchemaPreserved(Some(physicalSchemaOf(appends))) {
+        commit("MERGE", partitionCols,
+          dvNew = if (packed.isEmpty) None else Some(mergeDvInto(prev, packed)),
+          churn = Some((added, Set.empty)))
+      }
     }
   }
 
@@ -7934,11 +8102,12 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // layout (compactWhere's OPTIMIZE arranges one task per partition)
     val out = if (layoutBearing(operation)) replacement
       else maybeOptimizeWrite(replacement, partitionCols)
+    val phys = toPhysical(out)
     withMicrosTs {
-      toPhysical(out).write.mode(SaveMode.Append)
+      phys.write.mode(SaveMode.Append)
         .partitionBy(partitionCols.map(physicalColName): _*).parquet(path)
     }
-    commit(operation, partitionCols)
+    noteSchemaPreserved(Some(phys.schema))(commit(operation, partitionCols))
     }
 
   /** Rewrite ONLY the partitions matching `partitionCond` through `f` —
@@ -8495,18 +8664,15 @@ private[table] object CommitLiveCache
                          liveRows: Long, sizeBytes: Long)
 }
 
-/** Process-wide logical-schema cache — the write path's answer to
-  * Delta's `metaData.schemaString` in the log: without it every
-  * `tableSchemaOpt` (one per append/merge/conform) rebuilds a root
-  * file index, an O(live files) listing. Keyed by (version,
-  * `_props.txt` (len, mtime)): any commit moves the version, any
-  * metadata-only schema edit (declared extras, widenings, column
-  * mapping — THIS process or another) moves the properties signature,
-  * so a hit is always the schema `read.schema` would compute. One
-  * entry per root (the schema, not the file list — a few KB), cleared
-  * wholesale past 1024 roots.
+/** A process-wide schema cache: one (version, `_props.txt` (len, mtime)
+  * signature, schema) entry per table root, cleared wholesale past 1024
+  * roots. Any commit moves the version and any property edit the
+  * signature, so an entry serves only the state it was computed for; the
+  * schema-preserving commits ([[ManagedTable]]'s `noteSchemaPreserved`)
+  * and property edits that leave every schema-bearing key alone
+  * ([[rekey]]) carry it to the next state.
   */
-private[table] object SchemaCache {
+private[table] class VersionedSchemaCache {
   private val m = scala.collection.concurrent.TrieMap
     .empty[String, (Long, (Long, Long), org.apache.spark.sql.types.StructType)]
 
@@ -8521,32 +8687,27 @@ private[table] object SchemaCache {
     ()
   }
 
+  /** Move `root`'s entry from signature `from` to `to`, dropping it when
+    * it was keyed by any other signature.
+    */
+  def rekey(root: String, from: (Long, Long), to: (Long, Long)): Unit =
+    m.remove(root).foreach { case (v, sig, s) => if (sig == from) put(root, v, to, s) }
+
   def invalidate(root: String): Unit = { m.remove(root); () }
 }
 
-/** [[SchemaCache]]'s twin for the PHYSICAL footer schema a current-version
-  * root scan would infer: same (version, props-signature) key, so any
-  * commit or metadata edit misses and re-infers. Serving it via
-  * `rd.schema(...)` skips parquet schema inference — a footer-reading
-  * Spark job that otherwise runs once per managed read.
+/** The table's logical read schema — the write path's answer to Delta's
+  * `metaData.schemaString` in the log: without it every `tableSchemaOpt`
+  * (one per append/merge/conform) rebuilds a root file index, an O(live
+  * files) listing.
   */
-private[table] object PhysicalSchemaCache {
-  private val m = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, (Long, Long), org.apache.spark.sql.types.StructType)]
+private[table] object SchemaCache extends VersionedSchemaCache
 
-  def get(root: String, v: Long,
-          sig: (Long, Long)): Option[org.apache.spark.sql.types.StructType] =
-    m.get(root).collect { case (cv, csig, s) if cv == v && csig == sig => s }
-
-  def put(root: String, v: Long, sig: (Long, Long),
-          s: org.apache.spark.sql.types.StructType): Unit = {
-    if (m.size > 1024) m.clear()
-    m.put(root, (v, sig, s))
-    ()
-  }
-
-  def invalidate(root: String): Unit = { m.remove(root); () }
-}
+/** The PHYSICAL footer schema a current-version root scan would infer.
+  * Serving it via `rd.schema(...)` skips parquet schema inference — a
+  * footer-reading Spark job that otherwise runs once per managed read.
+  */
+private[table] object PhysicalSchemaCache extends VersionedSchemaCache
 
 /** Post-commit checkpoint maintenance behind
   * `graft.manifest.asyncCheckpoint`: one process-wide daemon thread
@@ -8669,6 +8830,13 @@ private[graft] final class SnapshotIndex(
 }
 
 object ManagedTable {
+  /** What a commit published: the version it created, the PHYSICAL
+    * partition columns it recorded, and the live paths it added and
+    * removed.
+    */
+  private[table] final case class Committed(version: Long,
+      partitionCols: Seq[String], added: Seq[String], removed: Seq[String])
+
   /** Per-session refcount for the [[ManagedTable.withMicrosTs]] conf
     * override: (in-flight managed writes, value to restore when the count
     * reaches zero). Keyed by session so independent sessions never

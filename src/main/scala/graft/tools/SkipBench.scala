@@ -25,31 +25,8 @@ object SkipBench {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
     // Spark jobs started while `plan` builds its frame, counted in an
-    // untimed call after the timed runs. A marker job follows `plan`, and
-    // listener events arrive in order, so once the marker's start is seen
-    // every earlier start has been counted.
-    val planJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.atomic.AtomicReference(
-      new java.util.concurrent.CountDownLatch(1))
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(
-            _.getProperty("spark.job.description") == "skip-bench-marker"))
-          markerSeen.get.countDown()
-        else planJobs.incrementAndGet()
-    })
-    def planJobsOf(plan: => DataFrame): Int = {
-      markerSeen.set(new java.util.concurrent.CountDownLatch(1))
-      planJobs.set(0)
-      plan
-      spark.sparkContext.setJobDescription("skip-bench-marker")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      if (!markerSeen.get.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        sys.error("skip-bench: the marker job never reached the listener; " +
-          "the planning job count would be partial")
-      planJobs.get()
-    }
+    // untimed call after the timed runs
+    def planJobsOf(plan: => DataFrame): Int = JobCounter.jobsDuring(spark)(plan)._2
     val wh = java.nio.file.Files.createTempDirectory("skip-bench").toString
 
     // ---- conjunctive range pruning on a Z-clustered lineitem ----

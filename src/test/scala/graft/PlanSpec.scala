@@ -488,4 +488,50 @@ class PlanSpec extends SparkSpec {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  /** Nodes of `plan` at or below a repartition that evaluate a word split
+    * or an array_distinct — the annotation work a spread exists to run
+    * above its exchange.
+    */
+  private def annotationBelowSpread(plan: LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByExpression}
+    plan.collect {
+      case s @ (_: Repartition | _: RepartitionByExpression) => s
+    }.flatMap(_.collect {
+      case n if n.expressions.exists(_.exists {
+        case _: StringSplit | _: ArrayDistinct => true
+        case _ => false
+      }) => n.nodeName
+    })
+  }
+
+  test("the corpus spread is a plan boundary: the quality filter stays above " +
+      "it, and sizing it runs no Spark job") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("plan-spread").toString + "/docs"
+    (1 to 40).map(i => (i.toLong, s"doc $i " + ("word " * (i % 7 + 1)) + s"w$i"))
+      .toDF("id", "text").coalesce(1).write.parquet(src)
+    val docs = spark.read.parquet(src)
+    val pipe = new graft.pipeline.CorpusPipeline(spark,
+      java.nio.file.Files.createTempDirectory("plan-spread-wh").toString)
+    val (annotated, buildJobs) = graft.tools.JobCounter.jobsDuring(spark)(
+      pipe.annotate(docs, "text").filter(col("quality_score") >= 0.5))
+    assert(buildJobs == 0, s"building the annotated frame ran $buildJobs jobs")
+    val below = annotationBelowSpread(annotated.queryExecution.optimizedPlan)
+    assert(below.isEmpty, s"annotation evaluated below the spread in: $below")
+    // negative control: a plain repartition lets Catalyst push the filter,
+    // with its word split inlined, below the exchange
+    val plain = docs.repartition(4).withColumn("w", split(col("text"), " "))
+      .filter(size(array_distinct(col("w"))) > 2)
+    assert(annotationBelowSpread(plain.queryExecution.optimizedPlan).nonEmpty,
+      "the check cannot see a pushed-down filter")
+    // an upstream shuffle narrower than the cores is not executed to
+    // size the spread, nor by the spread itself
+    val shuffled = docs.repartition(2)
+    val (_, spreadJobs) = graft.tools.JobCounter.jobsDuring(spark)(
+      graft.ops.Spread.toCores(shuffled))
+    assert(spreadJobs == 0, s"Spread.toCores ran $spreadJobs jobs")
+    assert(annotated.count() > 0)
+  }
 }

@@ -115,4 +115,146 @@ class SchemaCacheSpec extends SparkSpec {
     assert(got.map(r => if (r.isNullAt(2)) -1L else r.getLong(2)).toSeq ==
       Seq(-1L, -1L, 7L))
   }
+
+  // ---- carrying both entries across the engine's own commits -------------
+  // A commit that provably keeps the root scan's schema hands the cached
+  // entries to the version it creates, so the next read plans with no
+  // Spark job; every other commit leaves the next read to infer once.
+
+  private def jobsDuring[T](body: => T): (T, Int) =
+    graft.tools.JobCounter.jobsDuring(spark)(body)
+
+  private def qualifiedRoot(t: ManagedTable): String = {
+    val p = new org.apache.hadoop.fs.Path(t.path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
+
+  /** The schema a fresh handle reads with both caches cleared. */
+  private def freshSchema(t: ManagedTable) = {
+    SchemaCache.invalidate(qualifiedRoot(t))
+    PhysicalSchemaCache.invalidate(qualifiedRoot(t))
+    new ManagedTable(spark, t.path).read.schema
+  }
+
+  /** `read` and a skipping read on `k` plan with no Spark job, and `read`'s
+    * schema is the one inference gives.
+    */
+  private def assertCarried(t: ManagedTable, what: String): Unit = {
+    val (r, readJobs) = jobsDuring(t.read)
+    assert(readJobs == 0, s"$what: read planned with $readJobs jobs")
+    val (_, skipJobs) = jobsDuring(t.readWhere("k", 0L, 3L))
+    assert(skipJobs == 0, s"$what: readWhere planned with $skipJobs jobs")
+    val carried = r.schema
+    assert(carried == freshSchema(t), s"$what: carried ${carried.simpleString}")
+  }
+
+  /** `read` plans with exactly one Spark job (the root inference) and
+    * reads the schema inference gives.
+    */
+  private def assertInferredOnce(t: ManagedTable, what: String) = {
+    val (r, jobs) = jobsDuring(t.read)
+    assert(jobs == 1, s"$what: read planned with $jobs jobs")
+    assert(r.schema == freshSchema(t), s"$what: read ${r.schema.simpleString}")
+    r.schema
+  }
+
+  private def kv(ks: Seq[Long]) = ks.map(k => (k, s"v$k", k % 2)).toDF("k", "v", "p")
+
+  test("schema-preserving commits carry the schema: read and skipping reads " +
+      "plan with no job after append, merge, overwrite, compact, cluster, DV delete") {
+    val t = new ManagedTable(spark, tmpDir("sc-carry") + "/t")
+    t.overwrite(kv(1L to 6L))
+    t.read.schema
+    t.append(kv(Seq(7L, 8L)))
+    assertCarried(t, "append")
+    t.merge(kv(Seq(2L, 9L)), Seq("k"))
+    assertCarried(t, "unpartitioned merge")
+    t.overwrite(kv(1L to 8L))
+    assertCarried(t, "same-schema overwrite")
+    t.compact(2)
+    assertCarried(t, "compact")
+    t.cluster("k")
+    assertCarried(t, "cluster")
+    t.deleteVectored(col("k") === 3L)
+    assertCarried(t, "DV delete")
+    assert(t.read.orderBy("k").as[(Long, String, Long)].collect().map(_._1).toSeq ==
+      Seq(1L, 2L, 4L, 5L, 6L, 7L, 8L))
+    // the new files carry a declared column older footers lack: the read
+    // serves it from the declaration whichever footer inference samples
+    t.addColumns("score DOUBLE")
+    t.read.schema
+    t.append(kv(Seq(11L)).withColumn("score", lit(1.5)))
+    assertCarried(t, "append after ADD COLUMNS")
+    assert(t.read.filter(col("k") === 11L).select("score").as[Double].head() == 1.5)
+
+    val pt = new ManagedTable(spark, tmpDir("sc-carry-part") + "/t")
+    pt.overwrite(kv(1L to 6L), Seq("p"))
+    pt.read.schema
+    pt.append(kv(Seq(7L, 8L)))
+    assertCarried(pt, "partitioned append")
+    pt.merge(kv(Seq(2L, 10L)), Seq("k"), Seq("p"))
+    assertCarried(pt, "partitioned merge")
+    assert(pt.read.count() == 9L)
+  }
+
+  test("evolving, schema-changing and adopting commits infer once and read " +
+      "the new schema") {
+    val t = new ManagedTable(spark, tmpDir("sc-miss") + "/t")
+    t.overwrite(kv(1L to 4L))
+    t.read.schema
+    t.append(Seq((5L, "v5", 1L, 0.5)).toDF("k", "v", "p", "extra"),
+      allowEvolution = true)
+    assertInferredOnce(t, "evolving append")
+    t.merge(Seq((6L, "v6", 0L, 1.5, "z")).toDF("k", "v", "p", "extra", "tag"),
+      Seq("k"), allowEvolution = true)
+    assert(assertInferredOnce(t, "evolving merge").fieldNames.contains("tag"))
+    t.overwrite(Seq((1L, "a", 2.5)).toDF("k", "v", "score"))
+    assert(assertInferredOnce(t, "overwrite with a new schema").fieldNames.toSeq ==
+      Seq("k", "v", "score"))
+    t.addColumns("note STRING")
+    assert(assertInferredOnce(t, "ADD COLUMNS").fieldNames.contains("note"))
+    t.restore(0)
+    // the data rolls back; the ADD COLUMNS declaration stays
+    assert(assertInferredOnce(t, "RESTORE").fieldNames.toSeq == Seq("k", "v", "p", "note"))
+    // a file the engine did not write, adopted by a RECOVER commit
+    val stray = tmpDir("sc-stray") + "/s"
+    Seq((9L, "v9", 1L)).toDF("k", "v", "p").coalesce(1).write.parquet(stray)
+    val fs = new org.apache.hadoop.fs.Path(stray)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(stray))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    fs.rename(part, new org.apache.hadoop.fs.Path(t.path, "stray-" + part.getName))
+    t.read.schema
+    t.bootstrap()
+    assert(t.history(1).head().getAs[String]("operation") == "RECOVER")
+    assertInferredOnce(t, "RECOVER")
+    assert(t.read.filter(col("k") === 9L).count() == 1L)
+  }
+
+  test("a partition value that retypes the partition column is not carried") {
+    val t = new ManagedTable(spark, tmpDir("sc-retype") + "/t")
+    t.overwrite(Seq((1L, "1"), (2L, "2")).toDF("k", "p"), Seq("p"))
+    assert(t.read.schema("p").dataType == org.apache.spark.sql.types.IntegerType)
+    t.append(Seq((3L, "x")).toDF("k", "p"), Seq("p"))
+    val (r, jobs) = jobsDuring(t.read)
+    assert(jobs == 1, s"read after the retyping append planned with $jobs jobs")
+    assert(r.schema("p").dataType == org.apache.spark.sql.types.StringType)
+    assert(r.orderBy("k").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "1"), (2L, "2"), (3L, "x")))
+  }
+
+  test("a property edit that touches no schema-bearing key keeps both entries") {
+    val t = new ManagedTable(spark, tmpDir("sc-props") + "/t")
+    t.overwrite(kv(1L to 4L))
+    t.append(kv(Seq(5L)))
+    t.read.schema
+    t.setProperties(Map("graft.manifest.checkpointInterval" -> "7"))
+    val (_, readJobs) = jobsDuring(t.read)
+    assert(readJobs == 0, s"read after the edit planned with $readJobs jobs")
+    val (_, firstJobs) = jobsDuring(t.append(kv(Seq(6L))))
+    val (_, nextJobs) = jobsDuring(t.append(kv(Seq(7L))))
+    assert(firstJobs == nextJobs,
+      s"the first append after the edit ran $firstJobs jobs, the next $nextJobs")
+    assertCarried(t, "append after a property edit")
+  }
 }

@@ -1,7 +1,6 @@
 package graft.table
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -15,31 +14,8 @@ import org.apache.spark.sql.functions._
 class SkippingScanSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Spark jobs started while `body` runs. Deterministic without sleeps:
-    * a marker job runs after `body`, and listener events arrive in order,
-    * so once the marker's start is seen every earlier start has been.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val marker = "skipping-scan-spec-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(p =>
-            p.getProperty("spark.job.description") == marker)) seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job never reached the listener")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) =
+    graft.tools.JobCounter.jobsDuring(spark)(body)
 
   private def qualifiedRoot(t: ManagedTable): String = {
     val p = new org.apache.hadoop.fs.Path(t.path)
