@@ -655,8 +655,8 @@ object SparkEntry {
     "q60_corpus_pipeline" -> ((s, d) => {
       val wh = s"/tmp/graft_corpus_${new java.io.File(d).getName}"
       // FRESH warehouse each run: the pipeline overwrites managed tables,
-      // and every overwrite retires the previous snapshot + remaps a
-      // growing log — left to accumulate across a session's bench/verify
+      // and every overwrite retires the previous snapshot and grows the
+      // log — left to accumulate across a session's bench/verify
       // runs, q60 drifts upward measuring its own history (r13 found it
       // at 56 manifests / 50 snapshot dirs, +40% on the query), not the
       // pipeline. Deleting makes the measurement stationary.

@@ -15,12 +15,15 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, encode, expr, l
   *
   * Commit log: every mutation appends `<path>._log/v<N>.json` holding the
   * version, timestamp, operation, partition columns, file stats, row count
-  * and the version's full file manifest. Data replaced by a swap is retired
-  * into `<path>._v<N>` (N = the version whose manifest points there) rather
-  * than deleted — Delta's retain-until-vacuum discipline — so
-  * `readVersion(v)` reconstructs any logged snapshot from its manifest.
-  * [[vacuumVersions]] drops retained snapshots; plain `spark.read.parquet
-  * (path)` always sees the CURRENT version (the live dir holds only it).
+  * and the version's file manifest (a full list at checkpoints, else the
+  * add/remove delta). Data replaced by a rewrite is retired into
+  * `<path>._v<N>` (N + 1 = the retiring commit) rather than deleted —
+  * Delta's retain-until-vacuum discipline. The log is never edited: every
+  * manifest keeps the path a file was committed at, the rewrite commit
+  * logs the retired paths as removes, and `readVersion(v)` finds a retired
+  * file at read time ([[resolveLive]]). [[vacuumVersions]] drops retained
+  * snapshots; plain `spark.read.parquet(path)` always sees the CURRENT
+  * version (the live dir holds only it).
   *
   * Non-goal (documented, as in SURVEY.md §7.4): concurrent writers —
   * single-writer batch semantics like the reference notebook. A fail-fast
@@ -64,6 +67,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
   private def logDir = new Path(path + "._log")
   private def retainedDir(v: Long): String =
     fs.makeQualified(new Path(path + "._v" + v)).toString
+  /** K of a `<root>._vK` dir [[retainedDirsOf]] listed. */
+  private def retainedVersion(dir: String): Long =
+    dir.substring(dir.lastIndexOf("._v") + 3).toLong
   private def qualifiedRoot: String = fs.makeQualified(new Path(path)).toString
 
   /** Latest committed version, or -1 if the table has no log yet. */
@@ -127,13 +133,19 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * MISMATCH — the raw scan a rewrite would replace reads that empty
     * dir, not the clone's foreign files.
     */
-  private[graft] def dirMatchesLog: Boolean =
-    version >= 0 && {
-      val recorded = manifestFiles(version).toSet
+  private[graft] def dirMatchesLog: Boolean = {
+    val v = version
+    v >= 0 && {
+      // a live state this process cached at its commit of v IS recon(v)
+      // (committed manifests are never edited), so a warm probe skips
+      // the checkpoint + delta walk
+      val recorded = CommitLiveCache.get(qualifiedRoot, v).map(_.files.keySet)
+        .getOrElse(manifestFiles(v).toSet)
       val live = listParquet(new Path(path))
         .map(f => fs.makeQualified(new Path(f._1)).toString).toSet
       live == recorded
     }
+  }
 
   /** CONVERT-TO-GRAFT (Delta's `CONVERT TO DELTA parquet.`/p``,
     * deltalake.ipynb's bronze parquet→Delta adoption shape): record an
@@ -2508,28 +2520,24 @@ final class ManagedTable(spark: SparkSession, val path: String)
   }
 
   /** Shared tail of the file-granular rewrites ([[purgeDeletes]],
-    * [[compactSmall]]): retire exactly `files` into the current version's
-    * snapshot (remapping manifests + DV snapshots file-by-file), append
-    * the already-materialized `replacement` rows, and commit. Caller holds
-    * the lease and has materialized `replacement` (its plan reads the
-    * files being moved).
+    * [[compactSmall]], [[clusterIncremental]]): retire exactly `files`
+    * into the current version's snapshot, append the already-materialized
+    * `replacement` rows, and commit — a delta whose removes name the
+    * retired files' committed paths; no existing log file is touched.
+    * Caller holds the lease and has materialized `replacement` (its plan
+    * reads the files being moved).
     */
   private def retireAndReplace(files: Seq[String], replacement: DataFrame,
                                operation: String): Unit = {
     requireMaterialized(operation)
     val pcs = loggedPartitionCols(version)
     val cur = version
-    val moved = files.map { f =>
-      val rel = f.stripPrefix(qualifiedRoot + "/")
-      val dst = new Path(retainedDir(cur) + "/" + rel)
+    files.foreach { f =>
+      val dst = new Path(retainedDir(cur) + "/" + f.stripPrefix(qualifiedRoot + "/"))
       fs.mkdirs(dst.getParent)
-      // fail BEFORE the manifest remap — a half-moved file must not be
-      // double-counted as both live and retained
       if (!fs.rename(new Path(f), dst))
         throw new java.io.IOException(s"failed to retire $f to $dst")
-      f -> (retainedDir(cur) + "/" + rel)
-    }.toMap
-    remapFiles(moved)
+    }
     val phys = toPhysical(replacement)
     val w = phys.write.mode(SaveMode.Append)
     withMicrosTs {
@@ -2539,20 +2547,17 @@ final class ManagedTable(spark: SparkSession, val path: String)
     noteSchemaPreserved(Some(phys.schema))(commit(operation, pcs))
   }
 
-  /** Exact-path remap of log metadata (manifests + DV snapshots) for
-    * individually retired files — the file-granular sibling of
-    * [[remapManifests]]'s prefix remap.
+  /** Exact-path remap of the whole log (manifests, retro pointers, DV
+    * snapshots, checkpoint sidecars) — the ONE history rewrite left, and
+    * [[materialize]] is its only caller: a clone's history must be rebased
+    * from the source's files onto the local copies, or the source's
+    * VACUUM would break it. Rewrites never remap (a retired file is found
+    * at read time by [[resolveLive]]). Each file is replaced through
+    * [[writeAtomic]], so a crash leaves it whole — old or new — and the
+    * MATERIALIZE commit that follows checkpoints.
     */
-  /** Set by every manifest-path remap; the next [[commit]] sees it and
-    * writes a full checkpoint manifest instead of a delta (see the
-    * isCheckpoint note there). Mutations run under the lease, so the
-    * flag's remap→commit window is single-writer by construction.
-    */
-  private var manifestsRemapped = false
-
   private def remapFiles(mapping: Map[String, String]): Unit = {
     if (!fs.exists(logDir) || mapping.isEmpty) return
-    manifestsRemapped = true
     (fs.listStatus(logDir) ++ retroPointerStatuses).filter { st =>
       val n = st.getPath.getName
       st.isFile && n.startsWith("v") && n.endsWith(".json")
@@ -2560,10 +2565,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       val txt = readTextFully(st.getPath)
       val updated = mapping.foldLeft(txt) { case (t, (o, n)) =>
         t.replace(jstr(o), jstr(n)) }
-      if (updated != txt) {
-        val out = fs.create(st.getPath, true)
-        try out.write(updated.getBytes("UTF-8")) finally out.close()
-      }
+      if (updated != txt) writeAtomic(st.getPath, updated)
     }
     rewriteDvSnapshots(p => mapping.getOrElse(p, p))
     remapCheckpointSidecars(p => mapping.getOrElse(p, p))
@@ -2742,7 +2744,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * by [[commit]]: the caller declared its exact churn, the parent
     * version's live state is cached ([[CommitLiveCache]]), and this is a
     * plain delta commit — checkpoint commits and every trust boundary
-    * (BOOTSTRAP/RECOVER/clone/remap) take the listing path, which
+    * (BOOTSTRAP/RECOVER/clone/materialize) take the listing path, which
     * re-verifies against the dir and re-seeds the cache, bounding any
     * out-of-band drift to one checkpoint interval.
     */
@@ -2863,7 +2865,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // checkpoint (manifest-embedded or retro) plus deltas.
     val asyncCkpt =
       properties.get("graft.manifest.asyncCheckpoint").contains("true")
-    if (churn.isDefined && filesExplicit.isEmpty && !manifestsRemapped &&
+    if (churn.isDefined && filesExplicit.isEmpty &&
         (v % ckptEvery != 0 || asyncCkpt) &&
         operation != "BOOTSTRAP" && operation != "RECOVER" &&
         fs.exists(new Path(logDir, "_latest_files.txt")) &&
@@ -2912,7 +2914,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // listing. Soaked by OccSpec (writers straddling a state-assembled
     // checkpoint) and CommitFastPathSpec.
     val stateFiles: Option[Seq[(String, Long)]] =
-      if (churn.isEmpty || filesExplicit.isDefined || manifestsRemapped ||
+      if (churn.isEmpty || filesExplicit.isDefined ||
           operation == "BOOTSTRAP" || operation == "RECOVER")
         None
       else CommitLiveCache.get(qualifiedRoot, v - 1).map { st =>
@@ -2988,16 +2990,13 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // nearly the whole table anyway: the founding commit, BOOTSTRAP /
     // RECOVER (the live dir diverged out-of-band, so recon(v) must equal
     // the observed state exactly), explicit file lists (clones), and a
-    // missing consistency sidecar.
-    // a commit that FOLLOWS a manifest remap in the same mutation (dir
-    // swap, file retirement) must checkpoint: the remap rewrote historical
-    // add entries to retained paths, so a delta computed against the
-    // pre-move sidecar would no longer cancel them on reconstruction
+    // missing consistency sidecar — and MATERIALIZE, whose remap rebased
+    // the whole history onto local copies ([[remapFiles]]). A rewrite's
+    // commit is an ordinary delta: its removes name the committed paths.
     val isCheckpoint = v % ckptEvery == 0 || filesExplicit.isDefined ||
       operation == "BOOTSTRAP" || operation == "RECOVER" ||
-      manifestsRemapped ||
+      operation == "MATERIALIZE" ||
       !fs.exists(new Path(logDir, "_latest_files.txt"))
-    manifestsRemapped = false
     val fileEntry =
       if (isCheckpoint && checkpointFormatParquet) {
         // columnar checkpoint sidecar + pointer (see checkpointFormatParquet
@@ -3635,65 +3634,13 @@ final class ManagedTable(spark: SparkSession, val path: String)
     }
   }
 
-  /** Rewrite manifests after data under `oldRoot` moved to `newRoot`.
-    * `subdirs` empty = the whole root moved; else only those partition
-    * dirs. Driver-side string surgery on our own serialization: file
-    * entries are absolute qualified paths, so prefix replacement is exact.
-    */
-  private def remapManifests(oldRoot: String, newRoot: String,
-                             subdirs: Seq[String]): Unit = {
-    if (!fs.exists(logDir)) return
-    manifestsRemapped = true
-    // manifests store jstr-escaped paths — escape the prefixes the same way
-    // (strip jstr's closing quote; keep the opening one as the match anchor)
-    // so a path containing a backslash/control char still matches.
-    def prefix(s: String): String = jstr(s).dropRight(1)
-    val pairs =
-      if (subdirs.isEmpty) Seq((prefix(oldRoot + "/"), prefix(newRoot + "/")))
-      else subdirs.map(d => (prefix(s"$oldRoot/$d/"), prefix(s"$newRoot/$d/")))
-    // only the version manifests (jstr-escaped JSON) are remapped. The
-    // stats sidecar (base AND segments) is deliberately left alone: its
-    // entries are validated by (path, len) so a stale pre-move path is a
-    // harmless cache miss, and the next compaction drops it — remapping
-    // one sidecar layer but not the other would leave them inconsistent.
-    // `_latest_files.txt` is rewritten wholesale by the commit that
-    // immediately follows every move, so it needs no remap either.
-    // Retro pointers (async checkpoints) carry jstr paths exactly like
-    // manifests when the format is inline — sweep them with the same
-    // rewrite (their parquet sidecars ride remapCheckpointSidecars).
-    (fs.listStatus(logDir) ++ retroPointerStatuses).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.startsWith("v") && n.endsWith(".json")
-    }.foreach { st =>
-      val in = fs.open(st.getPath)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val updated = pairs.foldLeft(txt) { case (t, (o, n)) => t.replace(o, n) }
-      if (updated != txt) {
-        val out = fs.create(st.getPath, true)
-        try out.write(updated.getBytes("UTF-8")) finally out.close()
-      }
-    }
-    // deletion-vector snapshots key bitmaps BY PATH for the manifests'
-    // files — they move together or time travel resurrects deleted rows.
-    // Paths there are enc()-coded, not jstr-escaped: remap the decoded form.
-    val rawPairs =
-      if (subdirs.isEmpty) Seq((oldRoot + "/", newRoot + "/"))
-      else subdirs.map(d => (s"$oldRoot/$d/", s"$newRoot/$d/"))
-    def rawRemap(p: String): String = rawPairs.collectFirst {
-      case (o, n) if p.startsWith(o) => n + p.substring(o.length)
-    }.getOrElse(p)
-    rewriteDvSnapshots(rawRemap)
-    remapCheckpointSidecars(rawRemap)
-  }
-
   /** Rewrite the path column of every parquet checkpoint sidecar (single
     * AND multi-part — both share the `.checkpoint.parquet` suffix)
     * through `f`. Checkpoint rows hold paths OUTSIDE the JSON text (raw
-    * strings), so BOTH remap flavors — the prefix remap
-    * ([[remapManifests]], dir swaps) and the exact-path remap
-    * ([[remapFiles]], file-granular retirement) — must rewrite them too,
-    * or a post-move reconstruction would resolve retired files at their
-    * pre-move locations.
+    * strings), so [[remapFiles]] must rewrite them too, or a
+    * materialized clone's reconstruction through a parquet checkpoint
+    * would still name the source's files. Only [[materialize]] remaps;
+    * rewrites leave every sidecar as written.
     */
   private def remapCheckpointSidecars(f: String => String): Unit =
     fs.listStatus(logDir).filter { st =>
@@ -3728,8 +3675,8 @@ final class ManagedTable(spark: SparkSession, val path: String)
     }
 
   /** Rewrite the path key of every DV-snapshot line through `f` — the one
-    * place that understands the sidecar line format, shared by the prefix
-    * remap ([[remapManifests]]) and the exact-file remap ([[remapFiles]]).
+    * place that understands the sidecar line format; [[remapFiles]]'s DV
+    * half, so a materialized clone's bitmaps follow its local copies.
     */
   private def rewriteDvSnapshots(f: String => String): Unit =
     if (fs.exists(dvDir)) fs.listStatus(dvDir)
@@ -4113,8 +4060,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
   private def retroReverifyPath(v: Long) =
     new Path(retroDir, f"v$v%05d.reverify")
 
-  /** Every retro pointer's FileStatus — the remap sweeps fold these in
-    * with the manifest listing so moved tables keep reconstructing.
+  /** Every retro pointer's FileStatus — [[remapFiles]] folds these in
+    * with the manifest listing so a materialized clone keeps
+    * reconstructing.
     */
   private def retroPointerStatuses: Seq[org.apache.hadoop.fs.FileStatus] =
     if (!fs.exists(retroDir)) Nil
@@ -4564,9 +4512,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
   /** Publish the retro pointer WITHOUT ever touching the commit lease —
     * maintenance must never make a fail-fast foreground writer error out
     * just because a background pointer rename was in flight. Safety
-    * against the one mutation class that could invalidate the pointer's
-    * content (remaps, which rewrite historical checkpoint paths and
-    * always commit a version): publish, then retract if a mutation
+    * against the one mutation that could invalidate the pointer's content
+    * ([[materialize]]'s remap, which rewrites historical checkpoint paths
+    * and always commits a version — the only history rewrite left, so
+    * the protocol stays for it): publish, then retract if a mutation
     * overlapped. Either the remap's sweep started after our pointer
     * landed (the sweep rewrites it like any checkpoint artifact), or the
     * post-publish check sees the held lease / moved version and deletes
@@ -4660,11 +4609,11 @@ final class ManagedTable(spark: SparkSession, val path: String)
           ns.forall(n => fs.exists(new Path(logDir, n)))) }.getOrElse(false)
 
   /** Verdict for a pointer whose publish a since-COMMITTED mutation
-    * overlapped — possibly a remap, whose retroDir sweep may have listed
-    * BEFORE the publish and so never rewrote this pointer's paths
-    * (ADVICE r12: the kept-stale-pointer hazard). Retract when the
-    * hardened anchor copy can serve recon(v): the copy predates the
-    * mutation, so any remap sweep rewrote it.
+    * overlapped — possibly [[materialize]]'s remap, whose retroDir sweep
+    * may have listed BEFORE the publish and so never rewrote this
+    * pointer's paths (ADVICE r12: the kept-stale-pointer hazard).
+    * Retract when the hardened anchor copy can serve recon(v): the copy
+    * predates the mutation, so any remap sweep rewrote it.
     */
   private def adjudicateOverlappedPointer(v: Long): Unit = {
     val copyServes = scala.util.Try {
@@ -4688,7 +4637,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       logWarning(s"checkpoint maintenance on $path: v$v pointer anchors " +
         "the horizon, a commit overlapped its publish, and no hardened " +
         "anchor copy exists — kept (content may predate a remap; " +
-        "re-run maintenance after OPTIMIZE/restore to refresh)")
+        "re-run maintenance after materialize() to refresh)")
   }
 
   /** Render the deferred verdict for pointers kept PROVISIONALLY by
@@ -4938,7 +4887,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
   private[graft] def readFileSubset(v: Long, files: Seq[String],
                                     mergeSchema: Boolean = false): DataFrame = {
     if (files.isEmpty) return spark.emptyDataFrame
-    val where = resolveLive(s"version $v", files)
+    val where = resolveLive(v, s"version $v", files)
     // the version's deletion vectors apply per scan group BEFORE the union
     // (_metadata columns don't survive a union); keys follow any
     // shallow-clone resolution so moved files keep their bitmaps
@@ -4967,42 +4916,72 @@ final class ManagedTable(spark: SparkSession, val path: String)
     if (diff.isEmpty) None
     else {
       val files = diff.keys.toSeq.sorted
-      val where = resolveLive(s"version $v", files)
+      val where = resolveLive(v, s"version $v", files)
       val keyed = diff.map { case (p, a) => where.getOrElse(p, p) -> a }
       Some(scanResolved(files.map(where), keyed, keepMarked = true))
     }
   }
 
-  /** Manifest paths resolved to where each file lives NOW — identity for
-    * a file that exists. A foreign file (a shallow clone's reference into
-    * its source) that the source has since retired by a rewrite resolves
-    * to the same rel path under one of the source's retained snapshot
-    * dirs: retire renames move a file exactly once, and UUID part names
-    * make the rel path unique across snapshots — so a clone survives
-    * source OPTIMIZE/DML exactly until the source VACUUMs the snapshot
-    * (Delta's shallow-clone contract), and then fails pointedly.
-    *
-    * The OWN root's retained dirs are probed the same way: a path set
-    * pinned from the manifest BEFORE a concurrent rewrite (compaction /
-    * PURGE retires files by rename, and the remap sweep rewrites the
-    * manifests — but not a list already in a reader's hand) resolves to
-    * the retired copy instead of failing, so version-pinned readers
+  /** Version `v`'s manifest paths resolved to where each file lives NOW.
+    * The log keeps the path a file was committed at; a rewrite retires a
+    * file by moving it, exactly once, to the same rel path under
+    * `<root>._vK`, where K + 1 is the retiring commit — so `._vK` holds
+    * only files live at K. A file of version v under this table's root
+    * therefore resolves to the retained dir with the smallest K ≥ v (in
+    * numeric order) that holds its rel path, and otherwise to its
+    * committed path. Smallest-K, not root-first: BOOTSTRAP/RECOVER can
+    * adopt a non-Spark name (`part-0.parquet`) that a retired file
+    * already used, and a root probe would serve the newer file to the
+    * older version. The same rule keeps a path set pinned from the log
+    * BEFORE a concurrent rewrite readable (the file is found in
+    * `._v<cur>`; a move that lands between the dir listing and the root
+    * probe gets one fresh listing), so version-pinned readers
     * ([[readFileSubset]] consumers like the file-skipping contamination
     * screen) survive maintenance that lands mid-operation.
+    *
+    * A foreign file (a shallow clone's reference into its source) is
+    * served where it is, else from a source retained dir holding its rel
+    * path: UUID part names make that path unique across the source's
+    * snapshots, so a clone survives source OPTIMIZE/DML exactly until the
+    * source VACUUMs the snapshot (Delta's shallow-clone contract), and
+    * then fails pointedly.
     */
-  private def resolveLive(context: String,
+  private def resolveLive(v: Long, context: String,
                           files: Seq[String]): Map[String, String] = {
-    val frs = qualifiedRoot +: foreignRoots
+    val own = qualifiedRoot
+    // rel path → the smallest-K retained dir (K ≥ v) holding it: one
+    // recursive listing per such dir, never a per-(file, dir) probe matrix
+    def heldSince(): Map[String, String] =
+      retainedDirsOf(new Path(own))
+        .map(d => retainedVersion(d) -> d)
+        .filter(_._1 >= v).sortBy(-_._1)
+        .foldLeft(Map.empty[String, String]) { case (m, (_, d)) =>
+          m ++ listParquet(new Path(d)).map { case (f, _) =>
+            fs.makeQualified(new Path(f)).toString.stripPrefix(d + "/") -> d }
+        }
+    lazy val held = heldSince()
+    lazy val heldAgain = heldSince()
+    def ownAt(f: String, dirs: Map[String, String]): Option[String] = {
+      val rel = f.stripPrefix(own + "/")
+      dirs.get(rel).map(d => s"$d/$rel")
+        .orElse(Some(f).filter(p => fs.exists(new Path(p))))
+    }
+    val frs = foreignRoots
     lazy val retainedByRoot: Map[String, Seq[String]] =
       frs.map(r => r -> retainedDirsOf(new Path(r)).sorted.reverse).toMap
+    def foreignAt(f: String): Option[String] =
+      if (fs.exists(new Path(f))) Some(f)
+      else frs.collectFirst { case r if f.startsWith(r + "/") =>
+        val rel = f.stripPrefix(r + "/")
+        retainedByRoot(r).collectFirst {
+          case rd if fs.exists(new Path(s"$rd/$rel")) => s"$rd/$rel" }
+      }.flatten
     files.map { f =>
-      f -> (if (fs.exists(new Path(f))) f
-        else frs.collectFirst { case r if f.startsWith(r + "/") =>
-          val rel = f.stripPrefix(r + "/")
-          retainedByRoot(r).collectFirst {
-            case rd if fs.exists(new Path(s"$rd/$rel")) => s"$rd/$rel" }
-        }.flatten.getOrElse(throw new IllegalStateException(
-          s"$context is no longer readable (vacuumed?); missing $f")))
+      val at =
+        if (f.startsWith(own + "/")) ownAt(f, held).orElse(ownAt(f, heldAgain))
+        else foreignAt(f)
+      f -> at.getOrElse(throw new IllegalStateException(
+        s"$context is no longer readable (vacuumed?); missing $f"))
     }.toMap
   }
 
@@ -5060,7 +5039,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       applyDv(shapeScan(open(physicalSchema(spark.read.parquet(path))._1), open), dv)
     } else {
       val paths = kept.map(_.getPath.toString)
-      val where = resolveLive("the clone snapshot", paths)
+      val where = resolveLive(version, "the clone snapshot", paths)
       scanResolved(paths.map(where),
         dv.map { case (p, a) => where.getOrElse(p, p) -> a })
     }
@@ -5104,7 +5083,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       manifestFiles(version).map(f =>
         f -> cached.get(f).map(_._1).getOrElse(
           fs.getFileStatus(new Path(
-            resolveLive("the clone snapshot", Seq(f))(f))).getLen))
+            resolveLive(version, "the clone snapshot", Seq(f))(f))).getLen))
     }
 
   /** Timestamp-pinned read (Delta's `TIMESTAMP AS OF`): the latest version
@@ -5228,10 +5207,10 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * discipline: drop only retained dirs that serve NO version committed at
     * or after `olderThan`, so time travel keeps working inside the window
     * and an operator can run this on a schedule without losing yesterday's
-    * snapshots. A retained dir may hold files referenced by several
-    * versions' manifests (partition-pruned merges move dirs, they don't
-    * copy), so the keep-set is computed from the manifests of the
-    * in-window versions, not from the dirs' own ages.
+    * snapshots. `._vK` holds exactly the files commit K + 1 retired, all
+    * live at K, and serves versions ≤ K only ([[resolveLive]]) — so the
+    * keep rule is an index comparison against the window's earliest
+    * version, never a manifest read (see [[droppableRetainedDirs]]).
     */
   def vacuumVersions(olderThan: java.time.Instant): Unit = {
     import scala.collection.parallel.CollectionConverters._
@@ -5246,52 +5225,25 @@ final class ManagedTable(spark: SparkSession, val path: String)
   def vacuumDryRun(olderThan: java.time.Instant): Seq[String] =
     droppableRetainedDirs(olderThan)
 
-  /** Retained dirs serving NO version committed at or after `olderThan`.
-    * In-window versions come from the checkpoint (one file read); only
-    * THEIR manifests are opened, and the collect is the distinct set of
-    * referenced retained roots — never the exploded file list (at millions
-    * of files × thousands of commits that collect is a driver OOM; the
-    * root set is bounded by the version count).
+  /** Retained dirs serving NO version committed at or after `olderThan`:
+    * `._vK` is kept iff K ≥ e, the earliest in-window version whose
+    * manifest still exists (versions cleanupLog expired are beyond the
+    * travel horizon and keep nothing alive). Commit timestamps never
+    * regress ([[ictTimestamp]]), so every version from e on is in the
+    * window, and version K — where every file of `._vK` is live — is one
+    * of them exactly when K ≥ e. One history read and one parent listing;
+    * no manifest is opened.
     */
   private def droppableRetainedDirs(olderThan: java.time.Instant): Seq[String] = {
     if (!fs.exists(logDir)) return Nil
     val existing = retainedDirsOnDisk
     if (existing.isEmpty) return Nil
-    val inWindow = historyRows
+    val earliest = historyRows
       .filter(c => !java.time.Instant.parse(c.timestamp).isBefore(olderThan))
       .map(_.version).sorted
-      // versions whose manifests cleanupLog already expired are beyond the
-      // travel horizon: they cannot keep a retained dir alive
-      .filter(v => fs.exists(new Path(logDir, f"v$v%05d.json")))
-    val live: Set[String] =
-      if (inWindow.isEmpty) Set.empty
-      else {
-        // the union of the window's live sets touches a retained root only
-        // through (a) the earliest version's reconstructed set or (b) a
-        // later manifest's own add/checkpoint entries — removals never
-        // UN-reference within a union, so one reconstruction plus each
-        // later manifest's entries covers the window. Roots extract by
-        // prefix (`<root>._v<k>/…`), so the collect stays bounded by the
-        // retained-dir count, never the exploded file list.
-        val prefix = qualifiedRoot + "._v"
-        val refs = scala.collection.mutable.Set[String]()
-        def note(fls: Iterable[String]): Unit = fls.foreach { f =>
-          if (f.startsWith(prefix)) {
-            val cut = f.indexOf('/', prefix.length)
-            if (cut > 0) refs += f.substring(0, cut)
-          }
-        }
-        note(manifestFiles(inWindow.head))
-        inWindow.tail.foreach { v =>
-          val txt = manifestText(v)
-          checkpointFilesOf(txt) match {
-            case Some(full) => note(full)
-            case None => note(jsonStringArray(txt, "add").getOrElse(Nil))
-          }
-        }
-        refs.toSet
-      }
-    existing.filterNot(live)
+      .find(v => fs.exists(new Path(logDir, f"v$v%05d.json")))
+      .getOrElse(Long.MaxValue)
+    existing.filter(retainedVersion(_) < earliest)
   }
 
   /** Log retention (Delta's `delta.logRetentionDuration` cleanup): drop
@@ -5553,14 +5505,18 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * still-referenced source files under this root (one distributed pass,
     * session hadoop conf shipped to the copy tasks like [[cloneTo]]),
     * remap the manifest/DV/sidecar to the local copies, drop the marker
-    * and commit. After this the source can VACUUM freely and every
-    * mutation works. Idempotent: a materialized table no-ops.
+    * and commit (a checkpoint). After this the source can VACUUM freely
+    * and every mutation works. Idempotent: a materialized table no-ops.
+    * This is the one operation that edits committed log files
+    * ([[remapFiles]]): the clone's history must be rebased onto the local
+    * copies, since the files it names belong to a table whose VACUUM this
+    * clone no longer holds back.
     */
   def materialize(): Unit = withCommitLock {
     if (isShallowClone) {
       val frs = foreignRoots
       val origs = manifestFiles(version)
-      val where = resolveLive("materialize", origs)
+      val where = resolveLive(version, "materialize", origs)
       val dstQ = qualifiedRoot
       // orig manifest path → (current location, local destination): rel
       // layout (partition dirs) is preserved under our root
@@ -7322,25 +7278,15 @@ final class ManagedTable(spark: SparkSession, val path: String)
     val files = manifestFiles(v)
     if (files.isEmpty)
       return readVersionCurrentNames(v).withColumn(RowTracking.col, lit(-1L))
+    // bases key by the path a file was COMMITTED at — exactly the path
+    // the manifest keeps, whatever retired the file since
     val (_, ids0) = readRowIds()
-    // bases key by the path a file was COMMITTED at; a later rewrite
-    // retires it to `root._vN/<rel>` and remaps the historical manifest
-    // entries — but the rel path survives the (exactly-one) retire move,
-    // so the original key reconstructs by stripping the snapshot segment
-    def originalKey(f: String): String =
-      if (f.startsWith(qualifiedRoot + "._v")) {
-        val s = f.indexOf('/', qualifiedRoot.length + 3)
-        if (s > 0 && f.substring(qualifiedRoot.length + 3, s).forall(_.isDigit))
-          qualifiedRoot + f.substring(s)
-        else f
-      } else f
-    val ids: Map[String, Long] =
-      files.flatMap(f => ids0.get(originalKey(f)).map(f -> _)).toMap
+    val ids: Map[String, Long] = files.flatMap(f => ids0.get(f).map(f -> _)).toMap
     val missing = files.filterNot(ids.contains)
     require(missing.isEmpty, s"no row-id base recorded for " +
       s"${missing.take(3).mkString(", ")}${if (missing.size > 3) " …" else ""}" +
       " — was row tracking enabled after this version?")
-    val where = resolveLive(s"version $v", files)
+    val where = resolveLive(v, s"version $v", files)
     val dv = dvMapForVersion(v).map { case (p, a) => where.getOrElse(p, p) -> a }
     rowIdScan(files, where, ids, dv)
   }
@@ -7647,8 +7593,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * §7.6.5). Caveat: "readers" means plans RESOLVED after the swap — a
     * query (or streaming micro-batch) whose scan was planned on the
     * pre-swap paths and executes after them fails with FILE_NOT_EXIST;
-    * re-planning (a streaming restart replays off the remapped manifests)
-    * succeeds. Delta's OPTIMIZE avoids this by never moving live files
+    * re-planning succeeds (a streaming restart re-resolves the logged
+    * paths through [[resolveLive]], which finds them in the retained
+    * dir). Delta's OPTIMIZE avoids this by never moving live files
     * until VACUUM retention expires; the swap design trades that for
     * rewrite atomicity without a retention daemon.
     */
@@ -7672,10 +7619,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     }
     val dst = new Path(path)
     val cur = version
-    if (fs.exists(dst)) {
-      fs.rename(dst, new Path(retainedDir(cur)))
-      remapManifests(qualifiedRoot, retainedDir(cur), Nil)
-    }
+    if (fs.exists(dst)) fs.rename(dst, new Path(retainedDir(cur)))
     fs.rename(tmp, dst)
     // RESTORE writes a past version's rows: its schema is re-inferred
     noteSchemaPreserved(if (operation == "RESTORE") None else Some(phys.schema)) {
@@ -8077,7 +8021,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       .select(partitionCols.map(c => col(c).cast("string")): _*)
       .collect().toSet
     val cur = version
-    val movedDirs = affectedRows.toSeq.flatMap { row =>
+    affectedRows.foreach { row =>
       // Spark escapes partition values on disk (Hive-style %-escaping;
       // null → __HIVE_DEFAULT_PARTITION__) — build dir names with the
       // same function the writer uses, or values needing escaping would
@@ -8092,10 +8036,8 @@ final class ManagedTable(spark: SparkSession, val path: String)
         val dstDir = new Path(s"${retainedDir(cur)}/$dir")
         fs.mkdirs(dstDir.getParent)
         fs.rename(src, dstDir)
-        Some(dir)
-      } else None
+      }
     }
-    if (movedDirs.nonEmpty) remapManifests(qualifiedRoot, retainedDir(cur), movedDirs)
     // the affected dirs are gone from the live dir, so the replacement rows
     // (⊆ affected partitions) land as a plain partitioned append — through
     // the optimizeWrite rebalance unless the operation brought its own

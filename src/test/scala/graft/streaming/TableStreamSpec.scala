@@ -56,11 +56,11 @@ class TableStreamSpec extends SparkSpec {
       // drain the append BEFORE the swap-based OPTIMIZE: compaction
       // retires the live dir by rename, so a continuously-triggering
       // micro-batch planned on the pre-swap file paths loses the race and
-      // fails with FILE_NOT_EXIST (a restart replays fine off the
-      // remapped manifests — but this test is about row-neutrality, not
-      // crash recovery). On a quiet host the stream always consumed v1
-      // here anyway; the explicit drain makes that interleaving
-      // deterministic under load (the r14 driver-suite flake).
+      // fails with FILE_NOT_EXIST (a restart replays fine: the logged
+      // paths resolve into the retained dir — but this test is about
+      // row-neutrality, not crash recovery). On a quiet host the stream
+      // always consumed v1 here anyway; the explicit drain makes that
+      // interleaving deterministic under load (the r14 driver-suite flake).
       q.processAllAvailable()
       t.compact(numFiles = 1) // rewrites (1,a)+(2,b) into one file
       t.append(Seq((3L, "c")).toDF("k", "v"))

@@ -81,7 +81,7 @@ class DeletionVectorSpec extends SparkSpec {
     t.deleteVectored(col("id") < 50)
     val vDv = t.version
     // OVERWRITE renames the live dir into a retained snapshot — the DV
-    // snapshot must be path-remapped with the manifests
+    // snapshot's committed-path keys must still reach the moved files
     t.overwrite(spark.range(200, 210).toDF("id"))
     assert(t.read.count() == 10)
     assert(t.readVersion(vDv).count() == 50)
@@ -190,7 +190,7 @@ class DeletionVectorSpec extends SparkSpec {
     val after = spark.read.parquet(t.path)
       .select(input_file_name()).distinct().as[String].collect().toSet
     assert(untouched.subsetOf(after))
-    // the DV'd version still time-travels (file-granular remap)
+    // the DV'd version still time-travels (file-granular retirement)
     assert(t.readVersion(vDv).count() == 900)
     assert(t.readVersion(vDv - 1).count() == 1000)
     assert(t.history(1).select("operation").as[String].head() == "PURGE")

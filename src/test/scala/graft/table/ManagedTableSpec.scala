@@ -1071,6 +1071,34 @@ class ManagedTableSpec extends SparkSpec {
     assert(t.read.as[(Long, String)].collect().toSeq == Seq((3L, "c")))
   }
 
+  test("vacuum dry run drops exactly the retained dirs below the window's " +
+      "earliest version; every in-window version still reads") {
+    val t = freshTable("mt-vac-k")
+    def at(v: Long) = t.readVersion(v).select("k", "v", "p")
+      .as[(Long, String, String)].collect().toSet
+    t.overwrite(Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("k", "v", "p"),
+      Seq("p"))                                                        // v0
+    t.merge(Seq((1L, "A", "p1")).toDF("k", "v", "p"), Seq("k"), Seq("p")) // v1 → ._v0
+    Thread.sleep(5)
+    val cutoff = java.time.Instant.now()
+    Thread.sleep(5)
+    t.merge(Seq((2L, "B", "p2")).toDF("k", "v", "p"), Seq("k"), Seq("p")) // v2 → ._v1
+    t.append(Seq((3L, "c", "p1")).toDF("k", "v", "p"), Seq("p"))         // v3
+    t.merge(Seq((3L, "C", "p1")).toDF("k", "v", "p"), Seq("k"), Seq("p")) // v4 → ._v3
+    t.overwrite(Seq((9L, "z", "p9")).toDF("k", "v", "p"), Seq("p"))      // v5 → ._v4
+    val inWindow = (2L to 5L).map(v => v -> at(v)).toMap
+    // v2 is the window's earliest version: ._v0 and ._v1 serve only v0/v1
+    val root = new org.apache.hadoop.fs.Path(t.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def q(k: Int) = fs.makeQualified(new org.apache.hadoop.fs.Path(s"${t.path}._v$k")).toString
+    assert(t.vacuumDryRun(cutoff).toSet == Set(q(0), q(1)))
+    t.vacuumVersions(cutoff)
+    Seq(3, 4).foreach(k => assert(fs.exists(new org.apache.hadoop.fs.Path(q(k)))))
+    inWindow.foreach { case (v, rows) => assert(at(v) == rows, s"version $v") }
+    assert(at(2L) == Set((1L, "A", "p1"), (2L, "B", "p2")))
+    intercept[IllegalStateException](at(0L))
+  }
+
   test("retention vacuum with partitioned retained dirs keeps in-window data") {
     val t = freshTable("mt-vac-part")
     val v0 = Seq((1L, "a", "p1"), (2L, "b", "p2"), (3L, "c", "p3"))

@@ -3,8 +3,9 @@ package graft.table
 import graft.SparkSpec
 
 /** Delta-shaped commit manifests: most commits record only add/remove
-  * deltas vs the previous live set; periodic checkpoints (and every
-  * commit that follows a manifest remap) record the full file list.
+  * deltas vs the previous live set — a rewrite's commit included, whose
+  * removes name the retired files' committed paths; periodic checkpoints
+  * record the full file list.
   * Commit metadata cost therefore tracks the CHANGE, not the table —
   * the 100 TB contract — while reconstruction folds at most
   * checkpointInterval small manifests.
@@ -60,14 +61,20 @@ class ManifestDeltaSpec extends SparkSpec {
       s"delta manifest ($delta B) should be far smaller than checkpoint ($ckpt B)")
   }
 
-  test("a rewrite commit after the manifest remap checkpoints; history intact") {
+  test("a rewrite commit is a delta over the unedited log; history intact") {
     val t = pinnedTable("mdelta-swap")
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     t.append(Seq((3L, "c")).toDF("id", "s")) // v1: delta
-    t.compact(1)                             // v2: swap + remap → checkpoint
+    val history = Seq(0L, 1L).map(manifestText(t, _))
+    t.compact(1)                             // v2: swap, log untouched → delta
     assert(!isCheckpoint(t, 1L))
-    assert(isCheckpoint(t, 2L),
-      "a commit following a manifest remap must write a full checkpoint")
+    assert(!isCheckpoint(t, 2L),
+      "a rewrite commit must be an ordinary delta, not a forced checkpoint")
+    // its removes are the retired files' committed paths, and no earlier
+    // manifest was edited to point into the retained dir
+    val v2 = manifestText(t, 2L)
+    assert(v2.contains("\"remove\":[\"") && !v2.contains("._v"), v2)
+    assert(Seq(0L, 1L).map(manifestText(t, _)) == history)
     // time travel across the swap still reconstructs both sides exactly
     assert(t.readVersion(1L).count() == 3)
     assert(t.readVersion(0L).count() == 2)
@@ -129,7 +136,7 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(t.readVersion(1L).count() == 3)
     assert(t.readVersion(3L).count() == 5)
     assert(t.read.select("id").as[Long].collect().sorted.toSeq == (1L to 5L))
-    // survives a swap (remap + checkpoint) too
+    // survives a swap too
     t.compact(2)
     assert(t.readVersion(3L).count() == 5)
     assert(t.read.count() == 5)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Parquet checkpoint manifests (`graft.manifest.checkpointFormat =
   * parquet`, the 1e7-file regime prototype): columnar checkpoint
   * sidecars + pointer manifests, driver-side read/write, reader feature
-  * gating, and survival through the swap/remap and retention machinery.
+  * gating, and survival through the swap/retire and retention machinery.
   */
 class ParquetCheckpointSpec extends SparkSpec {
   import spark.implicits._
@@ -51,13 +51,13 @@ class ParquetCheckpointSpec extends SparkSpec {
     val t = mk(dir)
     for (i <- 1 to 3) t.append(Seq((i.toLong, s"v$i")).toDF("k", "v"))
     val vBefore = t.version
-    // an overwrite retires the live dir into a snapshot (remap path): the
-    // historical parquet checkpoints must follow the moved files
+    // an overwrite retires the live dir into a snapshot: the unedited
+    // historical parquet checkpoints must still find the moved files
     t.overwrite(Seq((99L, "new")).toDF("k", "v"))
     assert(t.read.as[(Long, String)].collect().toSet == Set((99L, "new")))
     for (v <- 0L to vBefore)
       assert(t.readVersion(v).count() == v + 1,
-        s"pre-swap version $v must still reconstruct through the remapped " +
+        s"pre-swap version $v must still reconstruct through the unedited " +
           "parquet checkpoint")
   }
 
@@ -302,7 +302,7 @@ class ParquetCheckpointSpec extends SparkSpec {
     assert(t.read.as[(Long, String)].collect().toSet == Set((99L, "new")))
     for (v <- 0L to vBefore)
       assert(t.readVersion(v).count() == v + 1,
-        s"pre-swap version $v must reconstruct through the remapped parts")
+        s"pre-swap version $v must reconstruct through the unedited parts")
   }
 
   test("file-granular retirement (PURGE) remaps parquet checkpoint rows") {
@@ -311,10 +311,10 @@ class ParquetCheckpointSpec extends SparkSpec {
     for (i <- 1 to 3) t.append(Seq((i.toLong, s"v$i")).toDF("k", "v"))
     val vBefore = t.version // v3 (delta over the v2 parquet checkpoint)
     t.deleteVectored(col("k") === 1L)
-    t.purgeDeletes() // retires the DV'd file; checkpoint rows must follow
+    t.purgeDeletes() // retires the DV'd file; checkpoint rows must still find it
     assert(t.read.count() == 3)
     for (v <- 0L to vBefore)
       assert(t.readVersion(v).count() == v + 1,
-        s"version $v must reconstruct through the file-granular remap")
+        s"version $v must reconstruct across the file-granular retirement")
   }
 }
